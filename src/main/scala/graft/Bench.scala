@@ -1,118 +1,72 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 object Bench {
+  def timeIt(f: => Unit): Double = {
+    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  }
+
+  def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+
+  /** JSON string literal: backslash, quote, and ALL control chars
+    * (<0x20) escaped — a tab or CR in a message or builder-authored SQL
+    * would otherwise make a consumer's json.load fail.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** One-off index/sketch-table builds are DDL, not queries (a
+    * production deployment builds them at ingest time): Bench
+    * materializes them untimed so the timed pass measures the
+    * probe/rollup reads the queries actually are (disclosed in the
+    * BASELINE.md addendum). EdgeStore (r8) runs the lineitem self-join
+    * once so the nine graph queries probe a bucketed table
+    * exchange-free; SketchStore (r9) runs the corpus explode + 64-min
+    * signature aggregate once for the text-dedup/containment queries.
+    */
+  val Stores: Seq[(String, (SparkSession, String) => Any)] = Seq(
+    "IvfIndex" -> ((s, d) => graft.operators.IvfIndex.ensure(s, d, npivots = 8)),
+    "SketchRollup" -> ((s, d) => graft.operators.SketchRollup.ensure(s, d)),
+    "ReportMaintenance" -> ((s, d) => graft.operators.ReportMaintenance.ensure(s, d)),
+    "QuantileRollup" -> ((s, d) => graft.operators.QuantileRollup.ensure(s, d)),
+    "PqIndex" -> ((s, d) => graft.operators.PqIndex.ensure(s, d)),
+    "IvfPq" -> ((s, d) => graft.operators.IvfPq.ensure(s, d, npivots = 8)),
+    "EdgeStore" -> ((s, d) => graft.operators.EdgeStore.ensure(s, d)),
+    "SketchStore" -> ((s, d) => graft.operators.SketchStore.ensure(s, d)))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER lets the same bench run on real executor
     // JVMs (e.g. local-cluster[2,16,8192] — serialized shuffles and
     // broadcasts, no shared driver heap); SPARK_GRAFT_JARS ships the
     // library jar to those executors exactly as spark-submit --jars
     // would (the ClusterVerify channel). Defaults unchanged: the
     // driver's per-round bench still runs local[cpus].
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    // Scan-split sizing, derived from the input (r10; generalizing
-    // the r7 scale-row knob): the local fixtures are ONE parquet file
-    // per table, so the default 128 MB maxPartitionBytes collapses
-    // EVERY scan to a single task at bench SF (dq_profile measured
-    // 1.9 s of single-threaded agg over a 1-task orders scan) and to
-    // 2-3 tasks at sf10/sf30 — the r6 superlinear-ratio artifact.
-    // Derive the split size so the largest input file scans at the
-    // session's full width: largest-file-bytes / cpus, clamped to
-    // [256 KB, 128 MB] (the floor keeps splits at parquet row-group
-    // grain — gen_sf writes 16 k-row groups; the cap is the Spark
-    // default, and a many-file production layout never reaches
-    // either bound). This follows the optimization guide's §2/§6
-    // rule — partitioning derived from input size and core count,
-    // not a constant tuned for one host — and it adapts with the
-    // driver's low-core scaling runs through the same $SPARK_GRAFT_
-    // CPUS they set. SPARK_GRAFT_MAX_PARTITION_BYTES still overrides.
-    val (derivedSplit, derivedInitialParts) = {
-      val files = Option(new java.io.File(sfDir).listFiles()).getOrElse(Array.empty)
-      def bytes(f: java.io.File): Long =
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty).map(bytes).sum
-        else f.length()
-      val parquet = files.filter(_.getName.endsWith(".parquet")).map(bytes)
-      val biggest = parquet.foldLeft(0L)(math.max)
-      val total = parquet.sum
-      // r11 HARNESS CHANGE (disclosed in OPTIMIZATION_r11.md; the
-      // guide's §2.2/§2.5 rule — scale-adaptive partitioning, not a
-      // constant tuned for one host): shuffle WIDTH derived from
-      // input size. `spark.sql.shuffle.partitions` stays = cpus (the
-      // session default every tiny bench-SF query coalesces to
-      // anyway), but AQE's pre-coalesce width
-      // (`...initialPartitionNum`) is total-input-bytes / 32 MB,
-      // clamped [cpus, 8·cpus]. At bench SF (17 MB of input) that IS
-      // cpus — bench timings and plans unchanged; at sf30 it widens
-      // the first shuffle of fact-sized aggregations/joins from 32 to
-      // ~220 partitions so per-task hash-agg state shrinks ~7× and
-      // AQE coalesces back wherever stages are actually small.
-      // Measured (sf30, single-pass standalone, this host, the A/B
-      // that motivated baking it in): dq_profile 130.6→54.1 s,
-      // supplier_hhi 111.5→48.1, cheapest_supplier 43.3→14.4,
-      // nation_market_share 44.6→30.9. Env-overridable.
-      val ipn = math.min(8L * cpus.toLong.max(1L),
-        math.max(cpus.toLong.max(1L), total / (32L << 20)))
-      (math.min(128L << 20, math.max(256L << 10, biggest / cpus.toLong.max(1L))),
-        ipn)
+    val spark = GraftSession.create(corpus = Some(sfDir),
+      master = sys.env.get("SPARK_GRAFT_MASTER"),
+      confs = sys.env.get("SPARK_GRAFT_JARS").map("spark.jars" -> _).toSeq)
+    val sc = spark.sparkContext
+    // Self-diagnosis counters (r6 verdict #6, r7 verdict #2): spill_mb
+    // separates memory pressure from a plan regression; run_ms closes
+    // the remaining ambiguity — a query whose WALL time doubles while
+    // its executor run_ms holds is contention, and a genuine plan
+    // regression moves run_ms with wall time; gc_ms attributes the
+    // JVM's own share. Jobs are tagged per query and pass, so the
+    // counts in bench_out.json are exact per pass, not approximate at
+    // pass boundaries.
+    val counters = TaskCounters.install(sc)
+    // Dev-loop filter: SPARK_GRAFT_ONLY=q1,q2 times just those
+    // queries (unset: the full set).
+    val selected = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet) match {
+      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
+      case None => SparkEntry.queries
     }
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS",
-          derivedInitialParts.toString))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", derivedSplit.toString))
-    val builder = builder0
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(builder.config("spark.jars", _))
-    val spark = builder.getOrCreate()
-    // A/B hook for session-conf experiments (e.g. the r9 sorted-bucket
-    // flag measurement): SPARK_GRAFT_EXTRA_CONFS="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(";").foreach { kv =>
-      // skip malformed segments (no '='): a stray token must not
-      // abort the whole bench run before any query executes (r9 ADVICE)
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => spark.conf.set(k.trim, v.trim)
-        case other => if (other.mkString.trim.nonEmpty)
-          System.err.println(s"SPARK_GRAFT_EXTRA_CONFS: skipping malformed segment '$kv'")
-      }
-    })
-    spark.sparkContext.setLogLevel("WARN")
-    // Self-diagnosis counters (r6 verdict #6): a contended host shows
-    // up as shuffle SPILL under memory pressure — record per-query
-    // spilled bytes so an inflated artifact (like the driver's
-    // BENCH_r06) is distinguishable from a plan regression WITHOUT an
-    // independent re-run. Listener events are async, so attribution
-    // is approximate at pass boundaries — fine for a diagnostic.
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    // r7 verdict #2 (finishing the r6 #6 hardening): per-query
-    // executor RUN time and GC time from the same task-metrics
-    // listener. spill_mb already separates "memory pressure" from
-    // "host contention"; run_ms closes the remaining ambiguity — a
-    // query whose WALL time doubles while its executor run_ms holds
-    // is contention (the executor did the same work, the host just
-    // descheduled it), and a genuine plan regression moves run_ms
-    // with wall time. gc_ms attributes the JVM's own share. With
-    // these, the driver's artifact is adjudicable WITHOUT an
-    // independent re-run.
-    val runMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val gcMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          spillBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-          runMs.addAndGet(m.executorRunTime)
-          gcMs.addAndGet(m.jvmGCTime)
-        }
-      }
-    })
-    graft.sources.Tables.configureSketchPerf(spark) // graft-owned session opts in
     // Untimed JVM/codegen warm-up on the tiny t1 fixture (BASELINE.md
     // excludes session startup; per-query timing below is unaffected
     // by which query happens to run first). Running every query at
@@ -120,70 +74,38 @@ object Bench {
     // cache keys on structure, not input path), so the timed sf pass
     // below measures execution, not JIT — no results are reused.
     val warmDir = "/root/testdata/sf0.001"
-    val warmSet = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").toSet)
-      .map(names => SparkEntry.queries.filter(kv => names(kv._1)))
-      .getOrElse(SparkEntry.queries)
-    warmSet.foreach { case (_, fn) =>
+    selected.foreach { case (_, fn) =>
       try fn(spark, warmDir).count() catch { case _: Throwable => () }
     }
-    // One-off index/sketch-table builds are DDL, not queries (a
-    // production deployment builds them at ingest time): materialize
-    // them untimed so the timed pass measures the probe/rollup reads
-    // the queries actually are. Disclosed in BASELINE.md addendum.
-    try graft.operators.IvfIndex.ensure(spark, sfDir, npivots = 8)
-    catch { case _: Throwable => () }
-    try graft.operators.SketchRollup.ensure(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.operators.ReportMaintenance.ensure(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.operators.QuantileRollup.ensure(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.operators.PqIndex.ensure(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.operators.IvfPq.ensure(spark, sfDir, npivots = 8)
-    catch { case _: Throwable => () }
-    // r8: the persisted co-purchase edge store — the lineitem
-    // self-join runs ONCE here (ingest DDL, the IvfIndex precedent,
-    // disclosed in BASELINE.md); the nine graph queries then probe
-    // the bucketed table exchange-free in the timed pass.
-    try graft.operators.EdgeStore.ensure(spark, sfDir)
-    catch { case _: Throwable => () }
-    // r9: the persisted document-sketch store — the corpus explode +
-    // 64-min signature aggregate runs ONCE here (ingest DDL); the
-    // text-dedup/containment queries then probe the doc-grain table.
-    try graft.operators.SketchStore.ensure(spark, sfDir)
-    catch { case _: Throwable => () }
+    // A failed store build is reported, never swallowed: its cost
+    // would otherwise move silently into the timed pass.
+    val stores = Stores.map { case (name, ensure) =>
+      val t0 = System.nanoTime()
+      val err = try { ensure(spark, sfDir); None } catch { case e: Throwable =>
+        System.err.println(s"bench: store $name failed to build: $e")
+        Some(e.toString)
+      }
+      name -> ((System.nanoTime() - t0) / 1000000L, err)
+    }
     // Per-query MEDIAN of 3 passes: single-pass timings on a shared
     // host showed 15-85% run-to-run spread (BENCH_r03's
     // budget_carryover 4.1 → 7.6 s was scheduling noise, not a plan
     // change), which drowned round-over-round comparison. The median
     // keeps one-off hiccups out while staying honest about steady
-    // state; a query that errors reports -1.
+    // state. A query with a failed pass reports -1 and is left out of
+    // the total (listed under "failed" in bench_out.json).
     // SPARK_GRAFT_PASSES overrides for big-SF scale rows where 3
     // passes would take an hour (the sf3/sf10 single-pass rows are
     // disclosed as such in BASELINE.md); the driver's per-round bench
     // keeps the median-of-3 default.
     val Passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(3)
-    // Dev-loop filter: SPARK_GRAFT_ONLY=q1,q2 times just those
-    // queries (the driver never sets it — full set by default).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
-    val spills = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val runs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val gcs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val walls = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = selected.map { case (name, fn) =>
-      val spill0 = spillBytes.get()
-      val run0 = runMs.get()
-      val gc0 = gcMs.get()
-      val times = Seq.fill(Passes) {
+      val times = (0 until Passes).map { p =>
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
+        try TaskCounters.tagged(sc, s"$name#$p")(fn(spark, sfDir).count())
+        catch { case e: Throwable => errors.getOrElseUpdate(name, e.toString) }
         val dt = (System.nanoTime() - t0) / 1e9
         // Block-manager hygiene BETWEEN timed runs (outside the
         // clock): every `cut()` (localCheckpoint) a query takes
@@ -205,39 +127,59 @@ object Bench {
         // evict the cache entries alongside their blocks.
         if (graft.sources.SharedFrames.enabled(spark))
           graft.sources.SharedFrames.clear(spark)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        if (ok) dt else -1.0
+        sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        dt
       }
-      spills(name) = (spillBytes.get() - spill0) >> 20 // MiB, all passes
-      // mean per pass (listener attribution is approximate at pass
-      // boundaries — a diagnostic, like spill_mb, not a benchmark)
-      runs(name) = (runMs.get() - run0) / Passes
-      gcs(name) = (gcMs.get() - gc0) / Passes
-      name -> times.sorted.apply(Passes / 2)
+      walls(name) = times
+      name -> (if (errors.contains(name)) -1.0 else median(times))
     }
+    counters.settle()
+    val perPass = results.keys.map { name =>
+      name -> (0 until Passes).map(p => counters.of(s"$name#$p"))
+    }.toMap
+    def sumOf(name: String, f: Counts => Long): Long = perPass(name).map(f).sum
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val sp = spills.collect { case (k, v) if v > 0 => s"\"" + k + "\":" + v }
+    val total = results.collect { case (k, v) if !errors.contains(k) => v }.sum
+    val sp = results.keys.map(k => k -> (sumOf(k, _.spillBytes) >> 20)) // MiB, all passes
+      .collect { case (k, v) if v > 0 => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val rn = runs.map { case (k, v) => s"\"" + k + "\":" + v }
+    // mean per pass (a diagnostic, like spill_mb, not a benchmark)
+    val rn = results.keys.map(k => s"\"" + k + "\":" + sumOf(k, _.runMs) / Passes)
       .mkString("{", ",", "}")
-    val gc = gcs.collect { case (k, v) if v > 0 => s"\"" + k + "\":" + v }
+    val gc = results.keys.map(k => k -> sumOf(k, _.gcMs) / Passes)
+      .collect { case (k, v) if v > 0 => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spill_mb":$sp,"run_ms":$rn,"gc_ms":$gc,"sf":"$sfDir","passes":$Passes,"per_query":"median"}"""
     println(fullLine)
     // r11 (the r10 verdict's item #2): the driver keeps only the last
-    // 2000 chars of stdout, which truncates the long per-query line —
-    // PERF_r10's per-query comparison came back empty. ALSO write the
-    // full JSON to a file so the per-query map survives any tail
-    // capture. Additive only: both stdout lines above/below are
-    // byte-identical to r10. Path: $SPARK_GRAFT_BENCH_OUT, defaulting
-    // to bench_out.json in the working directory.
+    // 2000 chars of stdout, which truncates the long per-query line.
+    // ALSO write the full JSON to a file so the per-query map survives
+    // any tail capture, plus additive keys the stdout lines do not
+    // carry: the failed queries, each store build, and per query its
+    // per-pass walls, jobs, stages and tasks (the numbers that say
+    // whether a query is FLOOR-bound — many tiny jobs paying
+    // scheduling latency — or COMPUTE-bound). Path:
+    // $SPARK_GRAFT_BENCH_OUT, defaulting to bench_out.json in the
+    // working directory.
+    def arr(xs: Seq[Any]): String = xs.mkString("[", ",", "]")
+    val record = results.keys.map { k =>
+      val c = perPass(k)
+      jsonString(k) + s""":{"walls":${arr(walls(k))},"jobs":${arr(c.map(_.jobs))},""" +
+        s""""stages":${arr(c.map(_.stages))},"tasks":${arr(c.map(_.tasks))}""" +
+        errors.get(k).map(e => s""","error":${jsonString(e)}""").getOrElse("") + "}"
+    }.mkString("{", ",", "}")
+    val storeJson = stores.map { case (k, (ms, err)) =>
+      jsonString(k) + s""":{"build_ms":$ms""" +
+        err.map(e => s""","error":${jsonString(e)}""").getOrElse("") + "}"
+    }.mkString("{", ",", "}")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try {
       val w = new java.io.PrintWriter(new java.io.File(outPath), "UTF-8")
-      try w.println(fullLine) finally w.close()
+      try w.println(fullLine.dropRight(1) +
+        s""","failed":${arr(errors.keys.map(jsonString).toSeq)},""" +
+        s""""stores":$storeJson,"per_query_record":$record}""")
+      finally w.close()
     } catch { case e: Throwable =>
       System.err.println(s"bench: could not write $outPath: $e")
     }

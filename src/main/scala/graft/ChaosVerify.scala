@@ -115,29 +115,24 @@ object ChaosVerify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     new java.io.File(outDir).mkdirs()
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,4,2048]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.jars", sys.env.getOrElse("GRAFT_JAR",
-        "target/scala-2.13/servicelevelreportingspark_2.13-0.1.0.jar"))
-      // the fault-tolerant lineage-cut plane: without this,
-      // dedup_clusters' checkpoint blocks die with the executor
-      .config("spark.graft.checkpointDir", s"$outDir/ckpt")
-      // r8 (r7 verdict #4): the streaming chaos phase runs a
-      // transformWithState query, which requires the RocksDB store —
-      // the same provider every streaming suite uses
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // shared-frames consumer under chaos (r6 verdict #8): the
-      // cached supportEdges frame must survive executor loss because
-      // the cut above routes it to the reliable store
-      .config("spark.graft.sharedFrames", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create(cpus = 8,
+      master = Some("local-cluster[2,4,2048]"),
+      confs = Seq(
+        "spark.jars" -> sys.env.getOrElse("GRAFT_JAR",
+          "target/scala-2.13/servicelevelreportingspark_2.13-0.1.0.jar"),
+        // the fault-tolerant lineage-cut plane: without this,
+        // dedup_clusters' checkpoint blocks die with the executor
+        "spark.graft.checkpointDir" -> s"$outDir/ckpt",
+        // r8 (r7 verdict #4): the streaming chaos phase runs a
+        // transformWithState query, which requires the RocksDB store —
+        // the same provider every streaming suite uses
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        // shared-frames consumer under chaos (r6 verdict #8): the
+        // cached supportEdges frame must survive executor loss because
+        // the cut above routes it to the reliable store
+        "spark.graft.sharedFrames" -> "true"))
     spark.sparkContext.setLogLevel("ERROR")
-    graft.sources.Tables.configureSketchPerf(spark)
 
     @volatile var removed = 0
     @volatile var taskFailures = 0

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-executor correctness run (r4 verdict #2): execute every
   * declared query on a `local-cluster[2, 4, …]` master — REAL executor
   * JVMs, a real serialized network shuffle, real broadcast transport —
@@ -24,23 +22,17 @@ import org.apache.spark.sql.SparkSession
 object ClusterVerify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,4,2048]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    // 2 executor JVMs x 4 cores: 8 slots, 8 shuffle partitions
+    val spark = GraftSession.create(cpus = 8,
+      master = Some("local-cluster[2,4,2048]"),
       // executors are fresh JVMs: ship the library jar the way
       // spark-submit --jars would (MutableURLClassLoader on the
       // executor). extraClassPath is NOT enough here — closures
       // capturing graft expressions then fail lambda deserialization
       // (found empirically: 13 queries with custom Expressions /
       // TypedImperativeAggregates broke; spark.jars fixes all 13).
-      .config("spark.jars", sys.env.getOrElse("GRAFT_JAR",
-        "target/scala-2.13/servicelevelreportingspark_2.13-0.1.0.jar"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.configureSketchPerf(spark)
+      confs = Seq("spark.jars" -> sys.env.getOrElse("GRAFT_JAR",
+        "target/scala-2.13/servicelevelreportingspark_2.13-0.1.0.jar")))
     new java.io.File(outDir).mkdirs()
 
     // wait for both executor JVMs to register (driver is not an

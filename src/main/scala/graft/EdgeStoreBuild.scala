@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Ingest-DDL timing for the persisted edge store: time
   * [[graft.operators.EdgeStore.ensure]] itself (the corpus-sized
   * lineitem self-join + support agg + bucketed write) and report its
@@ -13,22 +10,8 @@ import org.apache.spark.sql.SparkSession
 object EdgeStoreBuild {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    val builder = sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-      .fold(builder0)(v => builder0.config("spark.sql.files.maxPartitionBytes", v))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val spill = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    })
+    val spark = GraftSession.create(corpus = Some(dir))
+    val counters = TaskCounters.install(spark.sparkContext)
     val path = graft.operators.EdgeStore.storePath(dir)
     val f = new java.io.File(path)
     if (f.exists()) {
@@ -39,9 +22,11 @@ object EdgeStoreBuild {
     val t0 = System.nanoTime()
     graft.operators.EdgeStore.ensure(spark, dir)
     val sec = (System.nanoTime() - t0) / 1e9
+    counters.settle()
+    val spillMb = counters.total.spillBytes >> 20
     val edges = spark.read.parquet(s"$path/und").count() / 2
     println(s"""{"metric":"edge_store_build","value":$sec,"unit":"sec",""" +
-      s""""spill_mb":${spill.get() >> 20},"edges":$edges,"dir":"$dir"}""")
+      s""""spill_mb":$spillMb,"edges":$edges,"dir":"$dir"}""")
     spark.stop()
   }
 }

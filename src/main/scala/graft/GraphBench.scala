@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Bench.{median, timeIt}
+
 /** Hub-cap TIME crossover bench (r7 verdict #3): the wedge-VOLUME cut
   * of the hub cap was measured in r7 (281× on the hub-dense fixture),
   * but at sf0.1 the capped query was slightly SLOWER than uncapped —
@@ -46,22 +48,11 @@ object GraphBench {
     half.unionAll(half.select(col("y").as("x"), col("x").as("y")))
   }
 
-  private def timeIt(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
-  private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_graphbench")
     val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.create()
 
     val N = 200000L
     val K = 4
@@ -75,7 +66,7 @@ object GraphBench {
       val path = s"$dir/und_n${N}_d$d"
       if (!new java.io.File(s"$path/_SUCCESS").exists())
         undirected(spark, N, K, H, d)
-          .repartition(cpus.toInt, col("x"))
+          .repartition(cpus, col("x"))
           .write.mode("overwrite").parquet(path)
     }
 

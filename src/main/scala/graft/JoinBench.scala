@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Bench.{median, timeIt}
 import graft.sources.Tables
 
 /** Join-strategy bench (BASELINE.md addendum): the customer-side star
@@ -36,23 +37,11 @@ object JoinBench {
       .limit(10)
   }
 
-  private def timeIt(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
-  private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-joinbench-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.create(
+      confs = Seq("spark.sql.warehouse.dir" -> "/tmp/graft-joinbench-warehouse"))
 
     val lineitem = Tables.lineitem(spark, sfDir)
     val orders = Tables.orders(spark, sfDir)
@@ -69,7 +58,7 @@ object JoinBench {
           .forEach(p => java.nio.file.Files.delete(p))
       }
     }
-    val nBuckets = cpus.toInt
+    val nBuckets = cpus
     val tBucketBuild = timeIt {
       orders.write.bucketBy(nBuckets, "o_orderkey").sortBy("o_orderkey")
         .mode("overwrite").saveAsTable("jb_orders")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev harness (not part of the contract): dump `.explain("formatted")`
@@ -12,9 +11,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * `sbt "runMain graft.PlanSnap <outDir> <suffix> [queries] [sfDir]"`
   * writes `<outDir>/<query>_<suffix>.txt` per query; `queries` is a
   * comma-separated filter (default: all declared queries). The session
-  * mirrors Bench's 32-thread shape so the dumped plans are the ones the
-  * bench runs (same shuffle-partition count, same extensions, same
-  * sketch-perf session opts).
+  * comes from [[GraftSession]] with the corpus-derived confs, so the
+  * dumped plans are the ones the bench runs at the same
+  * `$SPARK_GRAFT_CPUS`.
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
@@ -22,16 +21,8 @@ object PlanSnap {
     val suffix = args(1)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
     val dir = args.lift(3).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.maxMetadataStringLength", "1000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.configureSketchPerf(spark)
+    val spark = GraftSession.create(corpus = Some(dir),
+      confs = Seq("spark.sql.maxMetadataStringLength" -> "1000"))
     Files.createDirectories(Paths.get(outDir))
     val mode = ExplainMode.fromString("formatted")
     SparkEntry.queries

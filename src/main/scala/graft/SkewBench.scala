@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Bench.{median, timeIt}
 
 /** Skew-join bench (BASELINE.md addendum): the same hot-key fact ⋈
   * uniform dim aggregate under (a) AQE skew-join split (the default
@@ -23,29 +25,17 @@ object SkewBench {
       count(lit(1)).as("n"),
       round(sum("v"), 2).as("sum_v"))
 
-  private def timeIt(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
-  private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_skew")
     val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val spark = GraftSession.create(confs = Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       // AQE's skew thresholds assume production-sized partitions
       // (256 MB); at bench scale the whole fact is ~500 MB, so scale
       // the thresholds down proportionally or the splitter never
       // engages and variant (a) silently measures variant (b)
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16m",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8m"))
     val fact = spark.read.parquet(s"$dir/fact.parquet")
     val dim = spark.read.parquet(s"$dir/dim.parquet")
 

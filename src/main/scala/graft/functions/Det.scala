@@ -35,9 +35,4 @@ object Det {
 
   /** round(x + 1e-9, 6) — for small reciprocal-rank sums (RRF). */
   def r6(c: Column): Column = round(c + lit(Eps6), 6)
-
-  /** SQL-side mirrors (DuckDB dialect) for oracle strings. */
-  def sql4(expr: String): String = s"round(($expr) + 1e-7, 4)"
-  def sql2(expr: String): String = s"round(($expr) + 2e-5, 2)"
-  def sql6(expr: String): String = s"round(($expr) + 1e-9, 6)"
 }

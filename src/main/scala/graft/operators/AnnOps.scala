@@ -136,13 +136,14 @@ object AnnOps {
 
   /** The original per-bit column form — reference implementation the
     * native expression is property-tested against (the dotHof
-    * pattern).
+    * pattern). A null embedding has no signature: NULL, as the native
+    * expression returns.
     */
   private[graft] def srpSignatureRef(emb: Column, dim: Int = 64,
       nBits: Int = 16): Column =
-    hyperplanes(dim, nBits).zipWithIndex.map { case (h, j) =>
+    when(emb.isNotNull, hyperplanes(dim, nBits).zipWithIndex.map { case (h, j) =>
       when(dot(emb, typedlit(h)) > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
+    }.reduce(_ + _))
 
   /** Embedding near-dup pairs at corpus scale — the LSH twin of the
     * O(n²) [[embNearDup]]: SRP signature → 4×4-bit chunk banding

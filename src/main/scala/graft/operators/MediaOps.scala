@@ -122,14 +122,6 @@ object MediaOps {
     }
   }
 
-  /** Per-media perceptual hashes: narrow map over the scan (the blob
-    * never moves), output (media_id, phash).
-    */
-  def phashes(ds: Dataset[MediaRecord]): DataFrame = {
-    import ds.sparkSession.implicits._
-    ds.map(r => (r.media_id, aHash(r.content))).toDF("media_id", "phash")
-  }
-
   /** Near-duplicate media pairs at hamming ≤ `maxHamming`, found by
     * block-COMBINATION banding + exact `bit_count(xor)` verify.
     *

@@ -16,7 +16,7 @@ import graft.functions.{DotProduct, GkMergeAgg, GkQuantiles, GkSketchAgg,
 
 /** Engine extension point, registered via
   * `spark.sql.extensions=graft.plans.GraftExtensions` (set by
-  * Verify/Bench/Profile/tests — and on a production cluster, by
+  * GraftSession/tests — and on a production cluster, by
   * spark-defaults). Injections:
   *
   *  1. `dot_product(array<double>, array<double>)` as a SQL-callable

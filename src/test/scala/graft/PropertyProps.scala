@@ -174,17 +174,21 @@ object SrpProps extends SparkProps("srp_lsh") {
   // r11: the fused native signature expression must equal the per-bit
   // when(dot > 0) reference form bit-for-bit on arbitrary vectors —
   // the candidate SET (and srp_near_dup's reported candidate count)
-  // depends on every bit.
+  // depends on every bit. Null embeddings ride along: both forms
+  // return NULL for them, never a 0 signature that would band a
+  // missing vector with every all-negative one.
   property("native srp signature == per-bit reference form, all widths") =
     forAll(genVecs) { case (rows, _) =>
-      val df = spark.createDataFrame(rows).toDF("vec_id", "emb")
+      val withNulls = rows ++ List((9000L, null: Seq[Double]), (9001L, null: Seq[Double]))
+      val df = spark.createDataFrame(withNulls).toDF("vec_id", "emb")
       Seq(16, 32, 60).forall { nBits =>
-        df.select(
-            AnnOps.srpSignature(org.apache.spark.sql.functions.col("emb"),
-              dim = 64, nBits = nBits).as("a"),
-            AnnOps.srpSignatureRef(org.apache.spark.sql.functions.col("emb"),
-              dim = 64, nBits = nBits).as("b"))
-          .collect().forall(r => r.getLong(0) == r.getLong(1))
+        val got = df.select(col("vec_id"),
+            AnnOps.srpSignature(col("emb"), dim = 64, nBits = nBits).as("a"),
+            AnnOps.srpSignatureRef(col("emb"), dim = 64, nBits = nBits).as("b"))
+          .collect()
+        got.forall(r =>
+          if (r.getLong(0) >= 9000L) r.isNullAt(1) && r.isNullAt(2)
+          else !r.isNullAt(1) && !r.isNullAt(2) && r.getLong(1) == r.getLong(2))
       }
     }
 }

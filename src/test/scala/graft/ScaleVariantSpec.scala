@@ -73,10 +73,24 @@ class ScaleVariantSpec extends SparkTestBase {
       .queryExecution.executedPlan.toString
     assert(!hllPlan.contains("Expand"),
       "HLL profile must be a single-pass agg (no multi-distinct Expand)")
-    val exactPlan = ScalarQueries.dqProfile(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(exactPlan.contains("Expand"),
-      "exact profile is expected to pay the Expand (else update the scaladocs)")
+    // exact lane (r11): six per-column two-phase distincts instead of
+    // the ×6 Expand multi-distinct — no Expand, no count(DISTINCT),
+    // and every dedup aggregate groups by exactly one column
+    val exactQe = ScalarQueries.dqProfile(spark, sf).queryExecution
+    assert(!exactQe.executedPlan.toString.contains("Expand"),
+      "exact profile must not pay the multi-distinct Expand")
+    val aggs = exactQe.optimizedPlan.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+    }
+    assert(!aggs.exists(_.aggregateExpressions.exists(_.exists {
+      case ae: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression =>
+        ae.isDistinct
+      case _ => false
+    })), "exact profile still plans a multi-column count(DISTINCT)")
+    val dedups = aggs.filter(_.groupingExpressions.nonEmpty)
+    assert(dedups.size == 6 && dedups.forall(_.groupingExpressions.size == 1),
+      s"expected six single-column distincts, got grouping " +
+        dedups.map(_.groupingExpressions.mkString(",")).mkString("; "))
     val rauPlan = ScaleVariants.rollingActiveUsersSketch(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!rauPlan.contains("events.parquet"),
