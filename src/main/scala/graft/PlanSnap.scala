@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev harness (not part of the contract): dump `.explain("formatted")`
@@ -13,7 +15,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * comma-separated filter (default: all declared queries). The session
   * comes from [[GraftSession]] with the corpus-derived confs, so the
   * dumped plans are the ones the bench runs at the same
-  * `$SPARK_GRAFT_CPUS`.
+  * `$SPARK_GRAFT_CPUS`. A query that fails to plan is reported on
+  * stderr; the run then ends with the list of failed queries and exit
+  * status 1.
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
@@ -25,16 +29,22 @@ object PlanSnap {
       confs = Seq("spark.sql.maxMetadataStringLength" -> "1000"))
     Files.createDirectories(Paths.get(outDir))
     val mode = ExplainMode.fromString("formatted")
-    SparkEntry.queries
+    val failed = SparkEntry.queries.toSeq
       .filter(kv => only.forall(_.contains(kv._1)))
-      .foreach { case (name, fn) =>
+      .flatMap { case (name, fn) =>
         try {
           val txt = fn(spark, dir).queryExecution.explainString(mode)
           Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
-        } catch { case e: Throwable =>
+          None
+        } catch { case NonFatal(e) =>
           System.err.println(s"[plansnap] $name failed: ${e.getMessage}")
+          Some(name)
         }
       }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[plansnap] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -307,24 +307,29 @@ object EdgeStore {
     wpairs.groupBy(col("x"))
       .agg(first(col("deg_x")).as("deg"), collect_list(col("y")).as("dsts"))
 
+  /** Last token of the `PUBLISHED` marker (`<epoch> <rows> end`). */
+  private val MarkerEnd = "end"
+
   /** Published-marker contents: the epoch the cache was derived from
-    * and (v6) the weighted table's row count, if the marker is intact
-    * and parseable. A count of -1 (torn/legacy marker) reads as
-    * "unknown" — probes fall back to counting.
+    * and (v6) the weighted table's row count. Only a marker that ends
+    * with [[MarkerEnd]] counts: a torn write (say `12 345` of
+    * `12 34567 end`) or a marker from before the terminator reads as
+    * ABSENT, so probes take the merge path and [[ensure]] republishes
+    * — a truncated count is never served.
     */
+  private[graft] def parseMarker(txt: String): Option[(Long, Long)] =
+    txt.trim.split("\\s+") match {
+      case Array(e, n, MarkerEnd) => scala.util.Try((e.toLong, n.toLong)).toOption
+      case _ => None
+    }
+
   private def publishedMeta(f: FileSystem, root: String): Option[(Long, Long)] = {
     val m = new Path(s"$root/PUBLISHED")
     if (!f.exists(m)) None
     else {
       val in = f.open(m)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+      try parseMarker(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
       finally in.close()
-      txt.split("\\s+") match {
-        case Array(e, n) =>
-          scala.util.Try((e.toLong, n.toLong)).toOption
-        case Array(e) => scala.util.Try((e.toLong, -1L)).toOption
-        case _ => None
-      }
     }
   }
 
@@ -365,7 +370,7 @@ object EdgeStore {
     // data pass), so per-probe regime picks stop paying a count job
     val nrows = published.count()
     val out = f.create(new Path(s"$root/PUBLISHED"), true)
-    try out.write(s"${p.epoch} $nrows".getBytes("UTF-8")) finally out.close()
+    try out.write(s"${p.epoch} $nrows $MarkerEnd".getBytes("UTF-8")) finally out.close()
     invalidate(spark, dir)
   }
 
@@ -653,19 +658,19 @@ object EdgeStore {
 
   /** Row count of [[weighted]] served from the publish marker when
     * the cache is servable for the current pointer state — None while
-    * committed-unfolded deltas are live (or under a torn/legacy
-    * marker), in which case callers count the merged frame
-    * themselves. Store METADATA, not a cached result: it is written
-    * once per publish from the published files and invalidated by the
-    * same epoch/delta discipline as every published plane.
+    * committed-unfolded deltas are live, in which case callers count
+    * the merged frame themselves (a torn marker reads as absent, and
+    * the [[ensure]] at open republishes it). Store METADATA, not a
+    * cached result: it is written once per publish from the published
+    * files and invalidated by the same epoch/delta discipline as every
+    * published plane.
     */
   def weightedRows(spark: SparkSession, dir: String): Option[Long] = {
     val root = ensure(spark, dir)
     val f = fs(spark, root)
     readPointer(f, root).flatMap { p =>
       if (liveIds(f, root, p).isEmpty)
-        publishedMeta(f, root)
-          .collect { case (e, n) if e == p.epoch && n >= 0 => n }
+        publishedMeta(f, root).collect { case (e, n) if e == p.epoch => n }
       else None
     }
   }

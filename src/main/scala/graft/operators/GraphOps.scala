@@ -65,9 +65,9 @@ object GraphOps {
     // component minimum by construction (roots only decrease), i.e.
     // byte-identical to the iterative fixpoint; GraphOpsSpec's
     // property test pins the equivalence against a reference
-    // union-find on random graphs. The threshold is per-session
-    // tunable (spark.graft.graph.localEdgeMax, default 4 M directed
-    // edges ≈ low-hundreds-MB per hot part) and the type gate keeps
+    // union-find on random graphs. The threshold is [[localEdgeMax]]
+    // (default 192 MiB ÷ 48 B ≈ 4.2 M undirected edges per hot part,
+    // per-session tunable) and the type gate keeps
     // exotic callers on the iterative plane; corpus-scale graphs are
     // untouched.
     val localMax = localEdgeMax(spark)
@@ -171,6 +171,11 @@ object GraphOps {
     * rows (one row per undirected edge), k-core counts the canonical
     * a<b frame, and hubDistance halves the symmetric adjacency's row
     * count — so the effective cap no longer differs 2× by call site.
+    * One exception is deliberate: `copurchasePagerank`'s local path
+    * (RelationalQueries) compares the SYMMETRIC weighted row count,
+    * because its single task holds the packed adjacency with every
+    * undirected edge as two dst entries — its working set is the
+    * symmetric count, so that is the figure the bytes budget caps.
     *
     * The default is BYTES-derived, not a bare row count (r11, the
     * r10 verdict's item #7): the k-core/BFS local paths materialize

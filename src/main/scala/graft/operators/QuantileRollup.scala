@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Det.r4
 import graft.functions.QuantileFunctions
-import graft.sources.Tables
+import graft.sources.{EventSink, Tables}
 
 /** Persisted per-day QUANTILE sketch table + rollup — the percentile
   * twin of [[SketchRollup]] (distinct counts) and
@@ -72,8 +72,7 @@ object QuantileRollup {
     */
   def appendDayFrom(spark: SparkSession, events: DataFrame, day: String,
       tablePath: String): Unit = {
-    events
-      .filter(to_date(col("ts")) === lit(day).cast("date"))
+    EventSink.onDays(events, Seq(day))
       .groupBy(col("event_type"), to_date(col("ts")).as("event_date"))
       .agg(
         QuantileFunctions.gkSketch(col("value"), Eps).as("qs"),

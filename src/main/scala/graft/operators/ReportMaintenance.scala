@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Det.{r2, r4}
-import graft.sources.Tables
+import graft.sources.{EventSink, Tables}
 
 /** Incrementally-maintained materialized day-report — the reference's
   * actual serving flow (`[pk]`: the SLR updater polls check results,
@@ -82,18 +82,19 @@ object ReportMaintenance {
 
   /** Recompute the given days from `events` (the post-merge sink — or
     * any frame with ts/event_type/value) and replace those days' rows
-    * in the report table. Days outside the list are never re-read AND
-    * never rewritten: the publish is a DYNAMIC partition overwrite
-    * scoped to the affected `event_date` leaf partitions, with new
-    * files staged by the commit protocol before the swap — a failed
-    * refresh cannot damage unaffected days, and re-running converges
-    * (the day row is a pure function of the day's data).
+    * in the report table. Days outside the list are never re-read
+    * (over the date-partitioned sink, [[EventSink.onDays]] prunes
+    * partitions) AND never rewritten: the publish is a DYNAMIC
+    * partition overwrite scoped to the affected `event_date` leaf
+    * partitions, with new files staged by the commit protocol before
+    * the swap — a failed refresh cannot damage unaffected days, and
+    * re-running converges (the day row is a pure function of the
+    * day's data).
     */
   def refreshDays(spark: SparkSession, events: DataFrame, days: Seq[String],
       tablePath: String): Unit = {
     if (days.isEmpty) return
-    val dayDates = days.map(java.sql.Date.valueOf)
-    dayStats(events.filter(to_date(col("ts")).isInCollection(dayDates)))
+    dayStats(EventSink.onDays(events, days))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("event_date")

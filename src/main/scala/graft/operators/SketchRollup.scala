@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.SketchFunctions
-import graft.sources.Tables
+import graft.sources.{EventSink, Tables}
 
 /** Pre-aggregated sketch table + rollup — the 100 TB "never re-read
   * raw data" aggregation story, executed rather than argued.
@@ -93,8 +93,7 @@ object SketchRollup {
     */
   def appendDayFrom(spark: SparkSession, events: DataFrame, day: String,
       tablePath: String): Unit = {
-    events
-      .filter(to_date(col("ts")) === lit(day).cast("date"))
+    EventSink.onDays(events, Seq(day))
       .select(col("event_type"), to_date(col("ts")).as("event_date"),
         xxhash64(col("user_id")).as("h"))
       .groupBy("event_type", "event_date")

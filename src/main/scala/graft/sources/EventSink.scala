@@ -100,6 +100,19 @@ object EventSink {
   def readDatePartitioned(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
+  /** The rows of `events` on the given UTC days (`yyyy-MM-dd`). The
+    * day test is on `ts`; when `events` carries the sink's `event_date`
+    * partition column, the same days filter it too, so a scan of the
+    * date-partitioned sink lists and reads only those days' directories.
+    */
+  def onDays(events: DataFrame, days: Seq[String]): DataFrame = {
+    val dates = days.map(java.sql.Date.valueOf)
+    val byTs = events.filter(to_date(col("ts")).isInCollection(dates))
+    if (events.columns.contains("event_date"))
+      byTs.filter(col("event_date").isInCollection(dates))
+    else byTs
+  }
+
   /** Time-range read with partition pruning: the [from, to) bound is
     * applied to the PARTITION column (so directory listing prunes)
     * AND to `ts` (row-group + row precision within boundary dates).

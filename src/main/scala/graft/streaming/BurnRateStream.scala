@@ -1,16 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Det.r4
 
 /** Streaming twin of `burn_rate_alerts` (SliQueries.scala #62) — the
   * multi-window multi-burn-rate alert policy run continuously instead
-  * of as a daily batch report. This is the deepest streaming pipeline
-  * in the library: THREE chained stateful stages (minute pre-agg →
-  * two window re-aggs → stream-stream window join → delivery dedup),
-  * exercising Spark's multiple-stateful-operator support end to end.
+  * of as a daily batch report. The stateful topology is one chain over
+  * ONE scan of the source, with no stream-stream join:
+  *
+  *   1. minute pre-agg: `avg(value)` per (minute, event_type);
+  *   2. hour re-agg over the minute rows: `count` of minutes and
+  *      `sum` of breach minutes per (hour, event_type);
+  *   3. sliding 6-hour/1-hour re-agg over the hour rows: `slow` sums
+  *      both counts over the six hours; `fast` is the NEWEST hour's
+  *      counts (`max` of the hour struct), kept only where that hour
+  *      ends with the sliding window;
+  *   4. delivery dedup ([[dedupForDelivery]]).
   *
   * Semantics: an hour alerts when BOTH
   *   - fast burn (that hour's breach-minute share / 1% budget) ≥ 100
@@ -18,18 +25,32 @@ import graft.functions.Det.r4
   * Fast catches the spike; slow suppresses one-hour blips. The slow
   * window here is the minute-weighted 6-hour share (the SRE-handbook
   * definition) — the batch #62 query uses the unweighted mean of
-  * hourly fasts; both are standard, and the spec pins this twin
-  * against ITS OWN batch run (shared expression ⇒ equivalence by
-  * construction, like StreamJoins).
+  * hourly fasts; both are standard. BurnRateStreamSpec pins the
+  * stream against its own batch run; BurnRateEquivalenceSpec pins
+  * both against an independent reference (the earlier join form) on
+  * generated inputs and on a fixture with incidents added.
+  *
+  * Why stage 3 equals the minute-grain sliding window: chained
+  * `window()` places a window row at `end − 1 µs`, so an hour row
+  * falls in exactly the six sliding windows its minute rows fall in.
+  * `fast` and `slow` are the same integer counts through the same
+  * double expressions as a per-minute computation, hence bit-identical
+  * after rounding. An hour with no rows has no hour row, so a sliding
+  * window whose newest hour is empty emits nothing — as an hour with
+  * no minutes has no fast burn.
   *
   * Scale notes: the minute pre-agg is the only stage that sees raw
-  * events — everything downstream re-aggregates minute rows (types ×
-  * 60/hour), so join + dedup state is O(types × window horizon),
-  * independent of event rate. The two re-aggs consume the minute
-  * stage's window column directly (`window(window, ...)` chaining),
-  * so no second scan of the source; the final join keys on
-  * (event_type, window end) — the documented windowed
-  * stream-stream-join pattern, state expired by watermark.
+  * events; the hour stage holds types × open hours and the sliding
+  * stage types × 6 open windows, so state is O(types × window
+  * horizon), independent of event rate. Only the hour `window` leaves
+  * stage 3 as an event-time column (a query may carry one).
+  *
+  * Checkpoints: this topology (three aggregations + dedup) replaced a
+  * five-operator one, in which the minute frame fed a fast-burn and a
+  * slow-burn aggregation (so each micro-batch scanned the source
+  * twice) that met in a stream-stream join. A checkpoint written by
+  * the join form cannot be resumed — Spark's state-schema check
+  * rejects it at start; restart such a query from a fresh checkpoint.
   */
 object BurnRateStream {
 
@@ -38,8 +59,12 @@ object BurnRateStream {
 
   private def breach = col("v") < 50 || col("v") > 150
 
-  /** Stage 1 — minute pre-aggregation (shared by both burn windows).
-    * Identical grain to the batch query's minute rollup.
+  /** Breach-minute share over a 1% error budget. */
+  private def burn(breaches: Column, minutes: Column): Column =
+    breaches * lit(1.0) / minutes / lit(0.01)
+
+  /** Stage 1 — minute pre-aggregation. Identical grain to the batch
+    * query's minute rollup.
     */
   def minuteRollup(events: DataFrame): DataFrame =
     events
@@ -47,40 +72,25 @@ object BurnRateStream {
       .groupBy(window(col("ts"), "1 minute"), col("event_type"))
       .agg(avg("value").as("v"))
 
-  /** Stage 2a — fast burn: tumbling 1-hour re-agg OVER the minute
-    * windows (chained stateful agg; no second source scan).
+  /** Stage 2 — tumbling 1-hour re-agg OVER the minute windows: the
+    * minute count and breach-minute count of each hour.
     */
-  def fastBurn(minutes: DataFrame): DataFrame =
+  def hourRollup(minutes: DataFrame): DataFrame =
     minutes
       .groupBy(window(col("window"), "1 hour"), col("event_type"))
       .agg(
         count(lit(1)).as("minutes"),
         sum(when(breach, 1L).otherwise(0L)).as("breaches"))
-      .select(
-        col("window"),
-        col("event_type"),
-        (col("breaches") * lit(1.0) / col("minutes") / lit(0.01)).as("fast"))
 
-  /** Stage 2b — slow burn: SLIDING 6-hour/1-hour re-agg over the same
-    * minute windows. Each minute row lands in 6 overlapping windows;
-    * the window ending at hour boundary H covers hours H-6..H.
-    */
-  def slowBurn(minutes: DataFrame): DataFrame =
-    minutes
-      .groupBy(window(col("window"), "6 hours", "1 hour").as("slow_window"),
-        col("event_type").as("slow_type"))
-      .agg(
-        count(lit(1)).as("minutes6"),
-        sum(when(breach, 1L).otherwise(0L)).as("breaches6"))
-      .select(
-        col("slow_window"),
-        col("slow_type"),
-        (col("breaches6") * lit(1.0) / col("minutes6") / lit(0.01)).as("slow"))
+  /** Fast burn per hour — stage 2's counts as a burn rate. */
+  def fastBurn(minutes: DataFrame): DataFrame =
+    hourRollup(minutes).select(
+      col("window"), col("event_type"),
+      burn(col("breaches"), col("minutes")).as("fast"))
 
-  /** Stage 3 — alert rows: join fast and slow on (event_type, window
-    * end) so each hour pairs with the 6-hour window that ENDS with it,
-    * then apply both thresholds. Valid on streaming frames (windowed
-    * stream-stream join) and batch frames (plain equi-join) alike.
+  /** Alert rows: one per (type, hour) that crosses both thresholds,
+    * with the hour's start as `alert_hour`. Valid on streaming and
+    * batch frames alike.
     */
   def alerts(events: DataFrame): DataFrame =
     alertWindows(events).select(
@@ -88,16 +98,32 @@ object BurnRateStream {
       col("window.start").as("alert_hour"),
       col("fast"), col("slow"))
 
-  /** As [[alerts]] but keeping the hour-window STRUCT: the struct is
-    * what carries the event-time/watermark metadata downstream
-    * (projecting `.start` strips it), so the dedup stage consumes
-    * this form.
+  /** Stage 3 — as [[alerts]] but keeping the hour-window STRUCT: the
+    * struct is what carries the event-time/watermark metadata
+    * downstream (projecting `.start` strips it), so the dedup stage
+    * consumes this form. The sliding window groups by the hour
+    * `window` column itself, and the newest hour is recovered from the
+    * per-group max of (window, minutes, breaches).
     */
   def alertWindows(events: DataFrame): DataFrame = {
-    val m = minuteRollup(events)
-    fastBurn(m).join(slowBurn(m),
-        col("event_type") === col("slow_type") &&
-          col("window.end") === col("slow_window.end"))
+    val hours = hourRollup(minuteRollup(events))
+    val sixHours = hours
+      .groupBy(window(col("window"), "6 hours", "1 hour").as("slow_window"),
+        col("event_type"))
+      .agg(
+        sum("minutes").as("minutes6"),
+        sum("breaches").as("breaches6"),
+        max(struct(col("window"), col("minutes"), col("breaches"))).as("last"))
+      .where(col("last.window.end") === col("slow_window.end"))
+    // the hour window takes over the sliding window's event-time
+    // metadata; the sliding window itself is dropped
+    val eventTime = sixHours.schema("slow_window").metadata
+    sixHours
+      .select(
+        col("event_type"),
+        col("last.window").as("window", eventTime),
+        burn(col("last.breaches"), col("last.minutes")).as("fast"),
+        burn(col("breaches6"), col("minutes6")).as("slow"))
       .where(col("fast") >= FastThreshold && col("slow") >= SlowThreshold)
       .select(
         col("event_type"), col("window"),
@@ -109,14 +135,14 @@ object BurnRateStream {
     * by construction, but an at-least-once source replay can re-emit
     * one; `dropDuplicatesWithinWatermark` makes delivery idempotent
     * with state bounded to the watermark horizon (vs `dropDuplicates`'
-    * unbounded key set). `alert_hour` carries event-time metadata
-    * propagated from the window aggs through the join, so NO second
-    * `withWatermark` node is added here — a second node would hold
-    * the global (min-policy) watermark at zero until it sees data,
-    * which it never would because the upstream aggs would then never
-    * finalize. Streaming-only — batch runs are exactly-once already.
-    * Consumes [[alertWindows]] (the window struct is the event-time
-    * carrier) and projects to the [[alerts]] schema after the dedup.
+    * unbounded key set). `window` carries event-time metadata from the
+    * window aggs, so NO second `withWatermark` node is added here — a
+    * second node would hold the global (min-policy) watermark at zero
+    * until it sees data, which it never would because the upstream
+    * aggs would then never finalize. Streaming-only — batch runs are
+    * exactly-once already. Consumes [[alertWindows]] (the window
+    * struct is the event-time carrier) and projects to the [[alerts]]
+    * schema after the dedup.
     */
   def dedupForDelivery(alertWindowRows: DataFrame): DataFrame =
     alertWindowRows

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.streaming.BurnRateStream
 
 /** Streaming burn-rate alerting (BurnRateStream): the chained
-  * minute→fast/slow→join→dedup pipeline emits exactly the batch run
+  * minute→hour→sliding-6h→dedup pipeline emits exactly the batch run
   * of the same expression, and the slow window provably suppresses a
   * spike the fast window alone would alert on.
   *
@@ -55,7 +55,7 @@ class BurnRateStreamSpec extends SparkTestBase {
       in.addData(fixture: _*)
       q.processAllAvailable()
       // sentinel batches: push the watermark far past every real
-      // window so all five stateful stages flush (append mode emits
+      // window so all four stateful stages flush (append mode emits
       // a window only once the watermark passes its end; the cascade
       // through chained stages needs a couple of no-data batches)
       (1 to 3).foreach { i =>
@@ -86,7 +86,7 @@ class BurnRateStreamSpec extends SparkTestBase {
     // fast fires from hour 2 on — six hours the naive policy would page
     (2 to 7).foreach(h => assert(byHour(h) >= BurnRateStream.FastThreshold))
     (0 to 1).foreach(h => assert(byHour(h) == 0.0))
-    // ...but the joined policy pages exactly once
+    // ...but the two-window policy pages exactly once
     val alerts = BurnRateStream.alerts(batchEvents).collect()
     assert(alerts.length == 1 && alerts.head.getString(0) == "api")
   }

@@ -397,6 +397,33 @@ class EdgeStoreSpec extends SparkTestBase {
       .contains(EdgeStore.weighted(spark, dirV).count()))
   }
 
+  test("torn PUBLISHED marker reads as absent: a truncated row count is never served") {
+    // only the whole `<epoch> <rows> end` parses; every proper prefix —
+    // including `7 1234`, a count cut short — reads as no marker
+    val whole = "7 123456 end"
+    assert(EdgeStore.parseMarker(whole).contains((7L, 123456L)))
+    (0 until whole.length).foreach { i =>
+      assert(EdgeStore.parseMarker(whole.take(i)).isEmpty,
+        s"torn marker '${whole.take(i)}' parsed")
+    }
+    // on disk: a marker torn inside the count must not reach
+    // weightedRows — the open republishes and serves the real count
+    val dirT = java.nio.file.Files.createTempDirectory("graft_edges_torn").toString
+    graft.sources.Tables.lineitem(spark, sf)
+      .write.mode("overwrite").parquet(s"$dirT/lineitem.parquet")
+    EdgeStore.ensure(spark, dirT)
+    val mf = new java.io.File(s"${EdgeStore.storePath(dirT)}/PUBLISHED")
+    val mtxt = new String(java.nio.file.Files.readAllBytes(mf.toPath), "UTF-8")
+    val torn = mtxt.split(" ").take(2).mkString(" ").dropRight(1)
+    java.nio.file.Files.write(mf.toPath, torn.getBytes("UTF-8"))
+    new java.io.File(s"${EdgeStore.storePath(dirT)}/.PUBLISHED.crc").delete()
+    val rows = EdgeStore.weighted(spark, dirT).count()
+    assert(rows >= 10 && EdgeStore.weightedRows(spark, dirT).contains(rows),
+      s"torn marker '$torn' served a wrong row count")
+    assert(new String(java.nio.file.Files.readAllBytes(mf.toPath), "UTF-8") == mtxt,
+      "open did not republish over the torn marker")
+  }
+
   test("graph consumers never scan lineitem (the no-rebuild pin)") {
     val graphPack = Seq("triangle_parts", "clustering_coeff", "kcore_parts",
       "degree_assortativity", "degree_dist", "common_neighbor_recs",

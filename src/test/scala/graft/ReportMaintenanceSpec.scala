@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{ReportMaintenance, SliQueries}
-import graft.sources.{Tables, Upsert}
+import graft.operators.{QuantileRollup, ReportMaintenance, SketchRollup, SliQueries}
+import graft.sources.{EventSink, Tables, Upsert}
 
 /** Exact materialized-view maintenance of the day report
   * (ReportMaintenance): incremental == one-shot == direct, correction
@@ -82,6 +82,53 @@ class ReportMaintenanceSpec extends SparkTestBase {
       .agg(sum("sum_value")).head().getDouble(0)
     assert(math.abs(after - 2 * before) < 1e-6 * math.abs(before),
       s"corrected day sum $after != 2 × original $before")
+  }
+
+  test("day recomputes over the date-partitioned sink read only the listed days") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val base = java.nio.file.Files.createTempDirectory("graft_report_prune").toString
+    val sink = s"$base/sink"
+    val ev = Tables.events(spark, sf)
+    EventSink.writeDatePartitioned(ev, sink) // one file per day
+    val days = distinctDays(ev)
+    val picked = Seq(days(1), days(days.size / 2))
+    assert(days.size > picked.size + 1)
+    // every scan of the sink made by the three day recomputes
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[FileSourceScanExec]()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        helper.collect(qe.executedPlan) {
+          case s: FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.toString.endsWith(sink)) => s
+        }.foreach(scans.add)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val sinkDf = spark.read.parquet(sink)
+      ReportMaintenance.refreshDays(spark, sinkDf, picked, s"$base/report")
+      SketchRollup.appendDayFrom(spark, sinkDf, picked.head, s"$base/sketch")
+      QuantileRollup.appendDayFrom(spark, sinkDf, picked.head, s"$base/quantile")
+      eventually(timeout(30.seconds)) { assert(scans.size >= 3) }
+    } finally spark.listenerManager.unregister(listener)
+    scans.forEach { s =>
+      assert(s.partitionFilters.exists(_.references.exists(_.name == "event_date")),
+        s"no event_date partition filter on the sink scan:\n$s")
+      val files = s.metrics("numFiles").value
+      assert(files >= 1 && files <= picked.size,
+        s"sink scan read $files files for ${picked.size} days (of ${days.size})")
+    }
+    // and the pruned refresh still equals the one-shot build on those days
+    val report = spark.read.parquet(s"$base/report")
+    val direct = ReportMaintenance.dayStats(ev)
+      .filter(col("event_date").isInCollection(picked.map(java.sql.Date.valueOf)))
+    assert(report.count() == direct.count() &&
+      report.exceptAll(direct.select(report.columns.map(col): _*)).isEmpty)
   }
 
   test("report-on-ingest: streaming upsert keeps sink AND report table converged") {

@@ -2,7 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -125,7 +125,7 @@ class StateStoreSpec extends SparkTestBase {
       s"join state not horizon-bounded: max $maxState of $fed fed rows")
   }
 
-  test("burn-rate pipeline (5 chained stateful stages) under RocksDB: all stages evict") {
+  test("burn-rate pipeline (4 stateful stages) under RocksDB: all stages evict") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val baseUs = 1704067200000000L
@@ -155,9 +155,16 @@ class StateStoreSpec extends SparkTestBase {
       }
       assertRocksDb(q)
       val ops = q.lastProgress.stateOperators
-      assert(ops.length >= 4,
-        s"expected the full chained-stateful pipeline, got ${ops.map(_.operatorName).toSeq}")
-      // post-flush, every finalized window/join row/dedup key is gone —
+      // the exact topology: minute, hour and sliding-6h aggregations
+      // plus the delivery dedup — no stream-stream join
+      assert(ops.map(_.operatorName).toSeq.sorted ==
+        Seq("dedupeWithinWatermark", "stateStoreSave", "stateStoreSave", "stateStoreSave"),
+        s"unexpected stateful operators ${ops.map(_.operatorName).toSeq}")
+      // ...over ONE scan of the source per micro-batch
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan
+      assert(plan.collectLeaves().length == 1, s"source scanned more than once:\n$plan")
+      // post-flush, every finalized window row and dedup key is gone —
       // only sentinel-era state may linger in each stage
       ops.foreach { op =>
         assert(op.numRowsTotal <= 30,
