@@ -150,5 +150,8 @@ object ReportMaintenance {
         r2(col("min_value")).as("min_value"),
         r2(col("max_value")).as("max_value"),
         r2(col("sum_value")).as("sum_value"))
+      // one row per (day, type): sorting it in a single task needs no
+      // range-partitioning sample job and no shuffle
+      .coalesce(1)
       .orderBy("day", "event_type")
 }

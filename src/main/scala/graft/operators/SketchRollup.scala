@@ -151,7 +151,9 @@ object SketchRollup {
     spark.read.schema(TableSchema).parquet(path)
 
   def sketchRollup(spark: SparkSession, dir: String): DataFrame = {
-    val daily = readTable(spark, ensure(spark, dir))
+    // one row per (day, type): a single task reads it, with no shuffle
+    // for the merge and none for the ordering
+    val daily = readTable(spark, ensure(spark, dir)).coalesce(1)
     daily
       .groupBy("event_type")
       .agg(

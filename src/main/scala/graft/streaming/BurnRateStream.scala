@@ -11,13 +11,12 @@ import graft.functions.Det.r4
   * ONE scan of the source, with no stream-stream join:
   *
   *   1. minute pre-agg: `avg(value)` per (minute, event_type);
-  *   2. hour re-agg over the minute rows: `count` of minutes and
-  *      `sum` of breach minutes per (hour, event_type);
-  *   3. sliding 6-hour/1-hour re-agg over the hour rows: `slow` sums
-  *      both counts over the six hours; `fast` is the NEWEST hour's
-  *      counts (`max` of the hour struct), kept only where that hour
-  *      ends with the sliding window;
-  *   4. delivery dedup ([[dedupForDelivery]]).
+  *   2. sliding 6-hour/1-hour re-agg over the minute rows: `slow` is
+  *      the count of minutes and of breach minutes in the six hours,
+  *      `fast` the same two counts over the window's newest hour (the
+  *      hour that ends with it); a window whose newest hour has no
+  *      minutes emits nothing;
+  *   3. delivery dedup ([[dedupForDelivery]]).
   *
   * Semantics: an hour alerts when BOTH
   *   - fast burn (that hour's breach-minute share / 1% budget) ≥ 100
@@ -30,22 +29,21 @@ import graft.functions.Det.r4
   * both against an independent reference (the earlier join form) on
   * generated inputs and on a fixture with incidents added.
   *
-  * Why stage 3 equals the minute-grain sliding window: chained
-  * `window()` places a window row at `end − 1 µs`, so an hour row
-  * falls in exactly the six sliding windows its minute rows fall in.
-  * `fast` and `slow` are the same integer counts through the same
-  * double expressions as a per-minute computation, hence bit-identical
-  * after rounding. An hour with no rows has no hour row, so a sliding
-  * window whose newest hour is empty emits nothing — as an hour with
-  * no minutes has no fast burn.
+  * Why one aggregation serves both burns: chained `window()` places a
+  * minute row at `end − 1 µs`, so it falls in the six sliding windows
+  * whose span holds the minute, and in the newest hour of exactly one
+  * of them. `fast` and `slow` are the integer counts a tumbling hour
+  * and a separate sliding window would give, through the same double
+  * expressions, hence bit-identical after rounding.
   *
   * Scale notes: the minute pre-agg is the only stage that sees raw
-  * events; the hour stage holds types × open hours and the sliding
-  * stage types × 6 open windows, so state is O(types × window
-  * horizon), independent of event rate. Only the hour `window` leaves
-  * stage 3 as an event-time column (a query may carry one).
+  * events; the sliding stage holds types × 6 open windows, so state
+  * is O(types × window horizon), independent of event rate. The
+  * newest hour's `window` (rebuilt from the sliding window's end)
+  * leaves stage 2 as the only event-time column (a query may carry
+  * one).
   *
-  * Checkpoints: this topology (three aggregations + dedup) replaced a
+  * Checkpoints: this topology (two aggregations + dedup) replaced a
   * five-operator one, in which the minute frame fed a fast-burn and a
   * slow-burn aggregation (so each micro-batch scanned the source
   * twice) that met in a stream-stream join. A checkpoint written by
@@ -72,22 +70,6 @@ object BurnRateStream {
       .groupBy(window(col("ts"), "1 minute"), col("event_type"))
       .agg(avg("value").as("v"))
 
-  /** Stage 2 — tumbling 1-hour re-agg OVER the minute windows: the
-    * minute count and breach-minute count of each hour.
-    */
-  def hourRollup(minutes: DataFrame): DataFrame =
-    minutes
-      .groupBy(window(col("window"), "1 hour"), col("event_type"))
-      .agg(
-        count(lit(1)).as("minutes"),
-        sum(when(breach, 1L).otherwise(0L)).as("breaches"))
-
-  /** Fast burn per hour — stage 2's counts as a burn rate. */
-  def fastBurn(minutes: DataFrame): DataFrame =
-    hourRollup(minutes).select(
-      col("window"), col("event_type"),
-      burn(col("breaches"), col("minutes")).as("fast"))
-
   /** Alert rows: one per (type, hour) that crosses both thresholds,
     * with the hour's start as `alert_hour`. Valid on streaming and
     * batch frames alike.
@@ -98,31 +80,36 @@ object BurnRateStream {
       col("window.start").as("alert_hour"),
       col("fast"), col("slow"))
 
-  /** Stage 3 — as [[alerts]] but keeping the hour-window STRUCT: the
+  /** Stage 2 — as [[alerts]] but keeping the hour-window STRUCT: the
     * struct is what carries the event-time/watermark metadata
     * downstream (projecting `.start` strips it), so the dedup stage
-    * consumes this form. The sliding window groups by the hour
-    * `window` column itself, and the newest hour is recovered from the
-    * per-group max of (window, minutes, breaches).
+    * consumes this form. The sliding window is a column of the minute
+    * rows, so the aggregation can single out the newest hour's minutes
+    * by a conditional sum. Every buffer is a long, which keeps the
+    * stage a code-generated hash aggregation.
     */
   def alertWindows(events: DataFrame): DataFrame = {
-    val hours = hourRollup(minuteRollup(events))
-    val sixHours = hours
-      .groupBy(window(col("window"), "6 hours", "1 hour").as("slow_window"),
-        col("event_type"))
+    val breaches = when(breach, 1L).otherwise(0L)
+    val hourStart = col("slow_window.end") - expr("INTERVAL 1 HOUR")
+    val newest = col("window.start") >= hourStart
+    val sixHours = minuteRollup(events)
+      .withColumn("slow_window", window(col("window"), "6 hours", "1 hour"))
+      .groupBy(col("slow_window"), col("event_type"))
       .agg(
-        sum("minutes").as("minutes6"),
-        sum("breaches").as("breaches6"),
-        max(struct(col("window"), col("minutes"), col("breaches"))).as("last"))
-      .where(col("last.window.end") === col("slow_window.end"))
-    // the hour window takes over the sliding window's event-time
-    // metadata; the sliding window itself is dropped
+        count(lit(1)).as("minutes6"),
+        sum(breaches).as("breaches6"),
+        sum(when(newest, 1L)).as("minutes1"),
+        sum(when(newest, breaches)).as("breaches1"))
+      .where(col("minutes1").isNotNull)
+    // the newest hour's window takes over the sliding window's
+    // event-time metadata; the sliding window itself is dropped
     val eventTime = sixHours.schema("slow_window").metadata
+    val hour = struct(hourStart.as("start"), col("slow_window.end").as("end"))
     sixHours
       .select(
         col("event_type"),
-        col("last.window").as("window", eventTime),
-        burn(col("last.breaches"), col("last.minutes")).as("fast"),
+        hour.as("window", eventTime),
+        burn(col("breaches1"), col("minutes1")).as("fast"),
         burn(col("breaches6"), col("minutes6")).as("slow"))
       .where(col("fast") >= FastThreshold && col("slow") >= SlowThreshold)
       .select(
@@ -131,7 +118,7 @@ object BurnRateStream {
         r4(col("slow")).as("slow"))
   }
 
-  /** Stage 4 — delivery dedup: alert rows are unique per (type, hour)
+  /** Stage 3 — delivery dedup: alert rows are unique per (type, hour)
     * by construction, but an at-least-once source replay can re-emit
     * one; `dropDuplicatesWithinWatermark` makes delivery idempotent
     * with state bounded to the watermark horizon (vs `dropDuplicates`'

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.streaming.BurnRateStream
 
 /** Streaming burn-rate alerting (BurnRateStream): the chained
-  * minute→hour→sliding-6h→dedup pipeline emits exactly the batch run
+  * minute→sliding-6h→dedup pipeline emits exactly the batch run
   * of the same expression, and the slow window provably suppresses a
   * spike the fast window alone would alert on.
   *
@@ -55,7 +55,7 @@ class BurnRateStreamSpec extends SparkTestBase {
       in.addData(fixture: _*)
       q.processAllAvailable()
       // sentinel batches: push the watermark far past every real
-      // window so all four stateful stages flush (append mode emits
+      // window so all three stateful stages flush (append mode emits
       // a window only once the watermark passes its end; the cascade
       // through chained stages needs a couple of no-data batches)
       (1 to 3).foreach { i =>
@@ -78,10 +78,11 @@ class BurnRateStreamSpec extends SparkTestBase {
   }
 
   test("slow window discriminates: hour 6 fast-only spike is suppressed") {
-    val m = BurnRateStream.minuteRollup(batchEvents)
-    val byHour = BurnRateStream.fastBurn(m)
+    val breaches = when(col("v") < 50 || col("v") > 150, 1L).otherwise(0L)
+    val byHour = BurnRateStream.minuteRollup(batchEvents)
       .filter(col("event_type") === "api")
-      .select(hour(col("window.start")).as("h"), col("fast"))
+      .groupBy(hour(col("window.start")).as("h"))
+      .agg((sum(breaches) * 1.0 / count(lit(1)) / 0.01).as("fast"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     // fast fires from hour 2 on — six hours the naive policy would page
     (2 to 7).foreach(h => assert(byHour(h) >= BurnRateStream.FastThreshold))

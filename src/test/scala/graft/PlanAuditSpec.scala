@@ -174,9 +174,9 @@ class PlanAuditSpec extends SparkTestBase {
     "near_dup_minhash" -> 9,
     "simhash_dups" -> 7, "source_overlap" -> 4,
     "percentile_approx_value" -> 2, "ann_cosine_topk" -> 0,
-    "sketch_rollup" -> 2, "srp_near_dup" -> 3, "salted_join" -> 2,
+    "sketch_rollup" -> 0, "srp_near_dup" -> 3, "salted_join" -> 2,
     "ann_knn_join" -> 4, "curate_corpus_neardup" -> 11,
-    "slo_report_maintained" -> 1, "interval_join_views" -> 3,
+    "slo_report_maintained" -> 0, "interval_join_views" -> 3,
     "burn_rate_alerts" -> 4, "zscore_anomaly" -> 3,
     "heavy_hitters" -> 4,
     "pivot_day_type" -> 3, "unpivot_type_stats" -> 5,

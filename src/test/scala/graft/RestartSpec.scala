@@ -54,10 +54,10 @@ class RestartSpec extends SparkTestBase {
       .filter(col("doubled") =!= col("value") * 2).count() == 0)
   }
 
-  test("STATEFUL restart: the 4-stage burn-rate pipeline resumes RocksDB state across runs") {
-    // The strong version of the restart contract: four chained
-    // stateful stages (minute agg -> hour re-agg -> sliding 6-hour
-    // re-agg -> watermark dedup) stopped MID-STREAM and resumed from
+  test("STATEFUL restart: the 3-stage burn-rate pipeline resumes RocksDB state across runs") {
+    // The strong version of the restart contract: three chained
+    // stateful stages (minute agg -> sliding 6-hour re-agg ->
+    // watermark dedup) stopped MID-STREAM and resumed from
     // the checkpoint must recover every stage's RocksDB state and
     // still emit exactly the batch answer — no lost minutes, no
     // duplicated alerts, watermark restored from the commit log.
@@ -96,7 +96,7 @@ class RestartSpec extends SparkTestBase {
       try q.awaitTermination(180000) finally q.stop()
     }
 
-    // wave 1 stops mid-breach (hours 0-4): open minute and hour windows, a
+    // wave 1 stops mid-breach (hours 0-4): open minute windows, a
     // half-filled 6-hour window — all must survive the stop
     rows(0 until 5).write.mode("append").parquet(src)
     runOnce()

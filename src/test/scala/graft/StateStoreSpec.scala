@@ -125,7 +125,7 @@ class StateStoreSpec extends SparkTestBase {
       s"join state not horizon-bounded: max $maxState of $fed fed rows")
   }
 
-  test("burn-rate pipeline (4 stateful stages) under RocksDB: all stages evict") {
+  test("burn-rate pipeline (3 stateful stages) under RocksDB: all stages evict") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val baseUs = 1704067200000000L
@@ -155,10 +155,10 @@ class StateStoreSpec extends SparkTestBase {
       }
       assertRocksDb(q)
       val ops = q.lastProgress.stateOperators
-      // the exact topology: minute, hour and sliding-6h aggregations
+      // the exact topology: minute and sliding-6h aggregations
       // plus the delivery dedup — no stream-stream join
       assert(ops.map(_.operatorName).toSeq.sorted ==
-        Seq("dedupeWithinWatermark", "stateStoreSave", "stateStoreSave", "stateStoreSave"),
+        Seq("dedupeWithinWatermark", "stateStoreSave", "stateStoreSave"),
         s"unexpected stateful operators ${ops.map(_.operatorName).toSeq}")
       // ...over ONE scan of the source per micro-batch
       val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
