@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 
-import StoreProtocol.{Pointer, committedIds, liveIds, readPointer, writePointer}
+import StoreProtocol.{Pointer, committedIds, liveIds, readPointer, storeKey, writePointer}
 
 /** Persisted co-purchase edge store — the IvfIndex pattern applied to
   * the graph plane (r7 verdict #1), extended in v3 to carry the full
@@ -157,22 +157,14 @@ object EdgeStore {
     */
   val AdHocIdBase: Long = StoreProtocol.AdHocIdBase
 
-  /** One sanitizer for BOTH the filesystem key and the catalog key,
-    * plus an md5 prefix of the RAW dir string: two corpus dirs that
-    * differ only in punctuation (`sf0.1` vs `sf0_1`) sanitize to the
-    * same slug but can never alias the same store or table (the r8
-    * ADVICE aliasing bug — the old code kept '.' in the path key but
-    * stripped it from the table key, silently cross-serving corpora).
-    */
-  private def storeKey(dir: String): String = StoreProtocol.storeKey(dir)
-
-  def storePath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_edges/v${FormatVersion}_${storeKey(dir)}"
+  def storePath(dir: String): String = StoreProtocol.root("edges", FormatVersion, dir)
 
   /** Catalog identifier of the published ≥2-support adjacency —
     * bucketing metadata lives in the catalog, so each session
     * re-registers the external table over the persisted files
-    * (cheap, idempotent).
+    * (cheap, idempotent). The catalog keys share the root's
+    * [[StoreProtocol.storeKey]], so a table never aliases another
+    * corpus's store (the r8 ADVICE bug).
     */
   def tableName(dir: String): String =
     s"graft_edges_v${FormatVersion}_${storeKey(dir)}"
@@ -401,9 +393,12 @@ object EdgeStore {
     meta.write.mode("overwrite").parquet(s"$root/base/epoch=$epoch/meta")
   }
 
-  /** Idempotent build-if-missing. Short-circuits only when the
-    * pointer resolves AND the pointed-at base exists; a stale/torn
-    * published cache (crash mid-publish — the r8 ADVICE `_SUCCESS`
+  /** Idempotent build-if-missing through [[StoreProtocol.ensureArtifact]]:
+    * served only when the pointer resolves, the pointed-at base exists
+    * and lineitem's stamp still matches; otherwise wiped (a corrupt
+    * pointer self-heals to None — r9 ADVICE — and stale deltas / commit
+    * markers under a fresh epoch-1 base would double-count) and rebuilt.
+    * A stale/torn published cache (crash mid-publish — the r8 ADVICE
     * short-circuit bug, now the epoch-marker check) is repaired here
     * when no live deltas are outstanding, and simply bypassed by the
     * merge-on-read probes when they are.
@@ -411,33 +406,15 @@ object EdgeStore {
   def ensure(spark: SparkSession, dir: String): String = synchronized {
     val root = storePath(dir)
     val f = fs(spark, root)
-    // source-regeneration guard: same dir path, different lineitem
-    // data (file listing stamp) ⇒ wipe and rebuild rather than serve
-    // the old corpus's derived planes
-    val d = if (dir.endsWith("/")) dir.dropRight(1) else dir
-    val stamp = StoreProtocol.sourceStamp(f, s"$d/lineitem.parquet")
-    if (!StoreProtocol.wipeOnSourceChange(f, root, stamp) &&
-        f.exists(new Path(s"$root/CURRENT")) &&
-        !f.exists(new Path(s"$root/SOURCE")))
-      // pre-stamp store: adopt the current stamp so future in-place
-      // regenerations are detected from now on
-      StoreProtocol.writeStamp(f, root, stamp)
-    readPointer(f, root) match {
-      case Some(p) if f.exists(new Path(s"$root/base/epoch=${p.epoch}/pairs/_SUCCESS")) =>
-        if (liveIds(f, root, p).isEmpty &&
-            !publishedEpoch(f, root).contains(p.epoch))
-          publishBase(spark, dir)
-      case _ =>
-        // rebuild-from-source: wipe any residue first (a corrupt
-        // pointer self-heals to None — r9 ADVICE — and stale deltas /
-        // commit markers under a fresh epoch-1 base would double-count)
-        f.delete(new Path(root), true)
-        val li = Tables.lineitem(spark, dir)
-        writeBase(spark, root, 1L, pairCounts(li), partCounts(li), orderCounts(li))
-        StoreProtocol.writeStamp(f, root, stamp)
-        writePointer(f, root, Pointer(1L, 0L, AdHocIdBase))
-        publishBase(spark, dir)
+    StoreProtocol.ensureArtifact(spark, root, dir, "lineitem", "pairs", epoched = true) {
+      val li = Tables.lineitem(spark, dir)
+      writeBase(spark, root, 1L, pairCounts(li), partCounts(li), orderCounts(li))
+      writePointer(f, root, StoreProtocol.Initial)
+      true
     }
+    val p = readPointer(f, root).get
+    if (liveIds(f, root, p).isEmpty && !publishedEpoch(f, root).contains(p.epoch))
+      publishBase(spark, dir)
     root
   }
 

@@ -168,14 +168,14 @@ object GraphOps {
     * runs as one exchange + one executor-side pass instead of
     * iterated jobs. Threshold semantics (r11, ADVICE): every call
     * site compares a count of undirected edges — CC counts its input
-    * rows (one row per undirected edge), k-core counts the canonical
-    * a<b frame, and hubDistance halves the symmetric adjacency's row
-    * count — so the effective cap no longer differs 2× by call site.
-    * One exception is deliberate: `copurchasePagerank`'s local path
-    * (RelationalQueries) compares the SYMMETRIC weighted row count,
-    * because its single task holds the packed adjacency with every
-    * undirected edge as two dst entries — its working set is the
-    * symmetric count, so that is the figure the bytes budget caps.
+    * rows (one row per undirected edge) and k-core counts the
+    * canonical a<b frame. Two call sites compare a SYMMETRIC row count
+    * on purpose, because their single task holds every undirected edge
+    * in both directions — their working set is the symmetric count, so
+    * that is the figure the bytes budget caps: `copurchasePagerank`'s
+    * local path (RelationalQueries; the packed adjacency has two dst
+    * entries per edge) and hubDistance's local BFS (its adjacency map
+    * stores x→y and y→x).
     *
     * The default is BYTES-derived, not a bare row count (r11, the
     * r10 verdict's item #7): the k-core/BFS local paths materialize
@@ -834,10 +834,12 @@ object GraphOps {
     // certifies. Iterative plane kept for corpus-scale graphs,
     // pinned in GraphOpsSpec by zeroing the threshold.
     var dist: DataFrame = null
-    // und is the SYMMETRIC adjacency (2 rows per undirected edge) —
-    // halve it so the threshold means the same undirected-edge count
-    // at every call site (r11, ADVICE)
-    if (und.count() / 2 <= localEdgeMax(spark)) {
+    // und is the SYMMETRIC adjacency (2 rows per undirected edge), and
+    // the local BFS stores both directions: compare the un-halved
+    // count, the task's working set (see [[localEdgeMax]])
+    val local = und.count() <= localEdgeMax(spark)
+    HubRounds.local = local
+    if (local) {
       import spark.implicits._
       dist = und.select(col("x"), col("y")).as[(Long, Long)]
         .groupByKey(_ => true)
@@ -1008,6 +1010,8 @@ object GraphOps {
   */
 object HubRounds {
   @volatile var last: Int = -1
+  /** Whether the last run took the one-task local plane. */
+  @volatile var local: Boolean = false
 }
 
 /** Test hook: the peel depth [[GraphOps.kcoreParts]] actually needed —

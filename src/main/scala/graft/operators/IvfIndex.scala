@@ -50,15 +50,12 @@ object IvfIndex {
     */
   val KmeansIters = 3
 
-  /** Index location for (corpus dir, npivots) under the JVM temp dir
-    * (a production deployment would use a managed table location).
-    * Deterministic so every query against the same corpus shares one
+  /** Index location for (corpus dir, npivots) ([[StoreProtocol.root]]):
+    * deterministic so every query against the same corpus shares one
     * index; versioned so stale-format artifacts are never picked up.
     */
-  def indexPath(dir: String, npivots: Int): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivf/v${FormatVersion}_${key}_p$npivots"
-  }
+  def indexPath(dir: String, npivots: Int): String =
+    StoreProtocol.root("ivf", FormatVersion, dir, s"_p$npivots")
 
   private def cosine(a: Column, b: Column): Column = AnnOps.cosine(a, b)
 
@@ -186,39 +183,42 @@ object IvfIndex {
     }
 
   /** Ensure the index for (dir, npivots) exists, building it if
-    * missing (idempotent; JVM-synchronized so concurrent suites can't
-    * race the write). The corpus is every embedding except the
-    * reserved query vector 0. Returns None for an empty corpus —
-    * there is nothing to index, and callers return an empty result.
+    * missing, torn (no `assign/` marker) or built from an embeddings
+    * table since regenerated in place ([[StoreProtocol.ensureArtifact]];
+    * JVM-synchronized so concurrent suites can't race the write). The
+    * corpus is every embedding except the reserved query vector 0.
+    * Returns None for an empty corpus — there is nothing to index, and
+    * callers return an empty result.
     */
   def ensure(spark: SparkSession, dir: String, npivots: Int): Option[String] = synchronized {
     val path = indexPath(dir, npivots)
-    val hPath = new org.apache.hadoop.fs.Path(s"$path/assign/_SUCCESS")
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(hPath)) return Some(path)
-    val corpus = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("label"),
-        col("embedding").cast("array<double>").as("emb"))
-    // the one driver-side step of the build: materialize the npivots
-    // seed rows (deterministic: lowest vec_ids) as literals, then
-    // refine them with spherical k-means ([[kmeansPivots]] — each
-    // iteration is a shuffle-free assignment + relational centroid
-    // agg; only npivots×dim doubles reach the driver)
-    val seeds: Seq[(Long, Seq[Double])] = corpus
-      .orderBy("vec_id").limit(npivots)
-      .select(col("vec_id"), col("emb")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
-    if (seeds.isEmpty) return None
-    val pivotRows = kmeansPivots(corpus, seeds, KmeansIters)
-    import spark.implicits._
-    pivotRows.toDF("p_id", "p_emb")
-      .write.mode("overwrite").parquet(s"$path/pivots")
-    assign(corpus, pivotRows)
-      .withColumn("ingest_batch", lit(0L))
-      .write.mode("overwrite").partitionBy("bucket", "ingest_batch")
-      .parquet(s"$path/assign")
-    Some(path)
+    val built = StoreProtocol.ensureArtifact(spark, path, dir, "embeddings", "assign") {
+      val corpus = Tables.embeddings(spark, dir)
+        .filter(col("vec_id") =!= 0)
+        .select(col("vec_id"), col("label"),
+          col("embedding").cast("array<double>").as("emb"))
+      // the one driver-side step of the build: materialize the npivots
+      // seed rows (deterministic: lowest vec_ids) as literals, then
+      // refine them with spherical k-means ([[kmeansPivots]] — each
+      // iteration is a shuffle-free assignment + relational centroid
+      // agg; only npivots×dim doubles reach the driver)
+      val seeds: Seq[(Long, Seq[Double])] = corpus
+        .orderBy("vec_id").limit(npivots)
+        .select(col("vec_id"), col("emb")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
+      seeds.nonEmpty && {
+        val pivotRows = kmeansPivots(corpus, seeds, KmeansIters)
+        import spark.implicits._
+        pivotRows.toDF("p_id", "p_emb")
+          .write.mode("overwrite").parquet(s"$path/pivots")
+        assign(corpus, pivotRows)
+          .withColumn("ingest_batch", lit(0L))
+          .write.mode("overwrite").partitionBy("bucket", "ingest_batch")
+          .parquet(s"$path/assign")
+        true
+      }
+    }
+    if (built) Some(path) else None
   }
 
   /** BATCH ANN join against a built index — the 100 TB workhorse

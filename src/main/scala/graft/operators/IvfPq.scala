@@ -30,37 +30,41 @@ object IvfPq {
 
   val FormatVersion = 1
 
-  def indexPath(dir: String, npivots: Int): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq/v${FormatVersion}_${key}_p${npivots}_m${PqIndex.M}k${PqIndex.K}"
-  }
+  def indexPath(dir: String, npivots: Int): String =
+    StoreProtocol.root("ivfpq", FormatVersion, dir, s"_p${npivots}_m${PqIndex.M}k${PqIndex.K}")
 
-  /** Build the combined index from the two planes' artifacts: read
-    * the IVF assignment (vec_id, label, emb, norm, bucket), encode
-    * each row's embedding against the PQ codebooks (literal-unrolled
-    * projection), drop the raw embedding, write partitioned by
-    * bucket. Returns None on an empty corpus.
+  /** Build the combined index from the two planes' artifacts (each
+    * ensured, so each checks its own stamp and marker): read the IVF
+    * assignment (vec_id, label, emb, norm, bucket), encode each row's
+    * embedding against the PQ codebooks (literal-unrolled projection),
+    * drop the raw embedding, write partitioned by bucket. This index's
+    * own stamp is checked before its `assign/` marker short-circuits
+    * ([[StoreProtocol.ensureArtifact]]). Returns None on an empty corpus.
     */
   def ensure(spark: SparkSession, dir: String, npivots: Int): Option[String] = synchronized {
     val path = indexPath(dir, npivots)
-    val hPath = new org.apache.hadoop.fs.Path(s"$path/assign/_SUCCESS")
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(hPath)) return Some(path)
-    val ivf = IvfIndex.ensure(spark, dir, npivots).getOrElse(return None)
-    val pq = PqIndex.ensure(spark, dir).getOrElse(return None)
-    val cb = graft.sources.Tables.cachedParquet(spark, s"$pq/cbook").collect().head
-      .getSeq[Any](0).map(_.asInstanceOf[scala.collection.Seq[Any]]
-        .map(_.asInstanceOf[scala.collection.Seq[Double]].toSeq).toSeq).toSeq
-    // pivots + codebook first; the assignment's _SUCCESS is written
-    // LAST and is the completion marker the existence check keys on
-    graft.sources.Tables.cachedParquet(spark, s"$ivf/pivots").write.mode("overwrite").parquet(s"$path/pivots")
-    graft.sources.Tables.cachedParquet(spark, s"$pq/cbook").write.mode("overwrite").parquet(s"$path/cbook")
-    graft.sources.Tables.cachedParquet(spark, s"$ivf/assign")
-      .select(col("vec_id"), col("label"),
-        PqIndex.encode(col("emb"), cb).as("codes"),
-        col("norm"), col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/assign")
-    Some(path)
+    val built = StoreProtocol.ensureArtifact(spark, path, dir, "embeddings", "assign") {
+      val planes = for {
+        ivf <- IvfIndex.ensure(spark, dir, npivots)
+        pq <- PqIndex.ensure(spark, dir)
+      } yield (ivf, pq)
+      planes.foreach { case (ivf, pq) =>
+        val cb = graft.sources.Tables.cachedParquet(spark, s"$pq/cbook").collect().head
+          .getSeq[Any](0).map(_.asInstanceOf[scala.collection.Seq[Any]]
+            .map(_.asInstanceOf[scala.collection.Seq[Double]].toSeq).toSeq).toSeq
+        // pivots + codebook first; the assignment is written LAST and
+        // its marker completes the build
+        graft.sources.Tables.cachedParquet(spark, s"$ivf/pivots").write.mode("overwrite").parquet(s"$path/pivots")
+        graft.sources.Tables.cachedParquet(spark, s"$pq/cbook").write.mode("overwrite").parquet(s"$path/cbook")
+        graft.sources.Tables.cachedParquet(spark, s"$ivf/assign")
+          .select(col("vec_id"), col("label"),
+            PqIndex.encode(col("emb"), cb).as("codes"),
+            col("norm"), col("bucket"))
+          .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/assign")
+      }
+      planes.isDefined
+    }
+    if (built) Some(path) else None
   }
 
   private def dot = AnnOps.dot _

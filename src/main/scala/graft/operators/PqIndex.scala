@@ -46,10 +46,8 @@ object PqIndex {
   val K = 16     // centroids per subspace (codes fit 4 bits; stored tinyint)
   val TrainIters = 3
 
-  def indexPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_pq/v${FormatVersion}_${key}_m${M}k$K"
-  }
+  def indexPath(dir: String): String =
+    StoreProtocol.root("pq", FormatVersion, dir, s"_m${M}k$K")
 
   private def dot(a: Column, b: Column): Column = AnnOps.dot(a, b)
 
@@ -149,28 +147,30 @@ object PqIndex {
     cb
   }
 
-  /** Ensure the PQ index for `dir` exists (idempotent, synchronized —
-    * same contract as [[IvfIndex.ensure]]). Corpus = every embedding
-    * except the reserved query vector 0. None on an empty corpus.
+  /** Ensure the PQ index for `dir` exists (same contract as
+    * [[IvfIndex.ensure]]; `codes/` is written last). Corpus = every
+    * embedding except the reserved query vector 0. None on an empty
+    * corpus.
     */
   def ensure(spark: SparkSession, dir: String): Option[String] = synchronized {
     val path = indexPath(dir)
-    val hPath = new org.apache.hadoop.fs.Path(s"$path/codes/_SUCCESS")
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(hPath)) return Some(path)
-    val corpus = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("label"),
-        col("embedding").cast("array<double>").as("emb"))
-    if (corpus.isEmpty) return None
-    val cb = trainCodebooks(corpus)
-    import spark.implicits._
-    Seq(Tuple1(cb)).toDF("cbook").write.mode("overwrite").parquet(s"$path/cbook")
-    corpus.select(col("vec_id"), col("label"),
-        encode(col("emb"), cb).as("codes"),
-        sqrt(dot(col("emb"), col("emb"))).as("norm"))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    Some(path)
+    val built = StoreProtocol.ensureArtifact(spark, path, dir, "embeddings", "codes") {
+      val corpus = Tables.embeddings(spark, dir)
+        .filter(col("vec_id") =!= 0)
+        .select(col("vec_id"), col("label"),
+          col("embedding").cast("array<double>").as("emb"))
+      !corpus.isEmpty && {
+        val cb = trainCodebooks(corpus)
+        import spark.implicits._
+        Seq(Tuple1(cb)).toDF("cbook").write.mode("overwrite").parquet(s"$path/cbook")
+        corpus.select(col("vec_id"), col("label"),
+            encode(col("emb"), cb).as("codes"),
+            sqrt(dot(col("emb"), col("emb"))).as("norm"))
+          .write.mode("overwrite").parquet(s"$path/codes")
+        true
+      }
+    }
+    if (built) Some(path) else None
   }
 
   /** PQ top-k: approximate-cosine shortlist from the codes table

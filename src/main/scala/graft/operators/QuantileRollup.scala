@@ -2,10 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.Det.r4
 import graft.functions.QuantileFunctions
-import graft.sources.{EventSink, Tables}
+import graft.sources.Tables
 
 /** Persisted per-day QUANTILE sketch table + rollup — the percentile
   * twin of [[SketchRollup]] (distinct counts) and
@@ -22,7 +23,7 @@ import graft.sources.{EventSink, Tables}
   * the GK rank guarantee end-to-end THROUGH the merge: every estimate
   * ranks within ε·n (+1) of its target against the exact sorted data.
   */
-object QuantileRollup {
+object QuantileRollup extends DayRollup {
 
   /** Relative rank error ε: estimates rank within 1% of target. */
   val Eps = 0.01
@@ -33,72 +34,39 @@ object QuantileRollup {
     */
   val FormatVersion = 2
 
-  def tablePath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_qsketch/v${FormatVersion}_$key"
-  }
+  protected val name = "qsketch"
 
-  /** Per-(event_type, event_date) sketch rows — the one raw scan. */
-  def dailySketches(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
+  val TableSchema: StructType = StructType.fromDDL(
+    "event_type string, qs binary, n_events bigint, event_date date")
+
+  /** Per-(event_type, event_date) sketch rows of an events frame. */
+  def dayRows(events: DataFrame): DataFrame =
+    events
       .groupBy(col("event_type"), to_date(col("ts")).as("event_date"))
       .agg(
         QuantileFunctions.gkSketch(col("value"), Eps).as("qs"),
         count(lit(1)).as("n_events"))
 
-  /** Idempotent one-shot build of the persisted sketch table
-    * (event_date-partitioned so a day refresh swaps single days).
-    */
-  def ensure(spark: SparkSession, dir: String): String = synchronized {
-    val path = tablePath(dir)
-    val hPath = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath))
-      dailySketches(spark, dir)
-        .write.mode("overwrite").partitionBy("event_date").parquet(path)
-    path
-  }
+  /** The one raw scan of the corpus's events. */
+  def dailySketches(spark: SparkSession, dir: String): DataFrame =
+    dayRows(Tables.events(spark, dir))
 
   /** Incremental maintenance — the daily-ETL append (mirror of
-    * [[SketchRollup.appendDayFrom]]): sketch ONLY the given day's
-    * rows from `events` and swap ONLY that day's partition of the
-    * persisted table (dynamic partition overwrite — other days' files
-    * are never touched, so a mid-publish crash is recoverable by
-    * re-running the day). Re-running a day is idempotent — the day
-    * row is a pure function of the day's data — so backfills and
-    * retries can never double-count, and QuantileSketchSpec proves
-    * day-wise builds answer quantiles within the same ε bound as
-    * one-shot builds.
+    * [[SketchRollup.appendDayFrom]]): sketch ONLY the given day's rows
+    * and swap ONLY that day's partition ([[refreshDays]]). Re-running a
+    * day is idempotent, so backfills and retries can never
+    * double-count, and QuantileSketchSpec proves day-wise builds
+    * answer quantiles within the same ε bound as one-shot builds.
     */
   def appendDayFrom(spark: SparkSession, events: DataFrame, day: String,
-      tablePath: String): Unit = {
-    EventSink.onDays(events, Seq(day))
-      .groupBy(col("event_type"), to_date(col("ts")).as("event_date"))
-      .agg(
-        QuantileFunctions.gkSketch(col("value"), Eps).as("qs"),
-        count(lit(1)).as("n_events"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("event_date")
-      .parquet(tablePath)
-  }
+      tablePath: String): Unit =
+    refreshDays(spark, events, Seq(day), tablePath)
 
   /** Declared query `quantile_sketch_rollup` (rows-only: GK sketch
     * internals have no DuckDB mirror; the ε rank bound is asserted in
     * QuantileSketchSpec): all-time p50/p90/p99 per event_type computed
     * ONLY from the persisted per-day sketch table.
     */
-  /** Stored-table schema, declared so reads survive an EMPTY table
-    * (a partitioned write of zero rows leaves no data files to infer
-    * from; event_date is the partition column).
-    */
-  val TableSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "event_type string, qs binary, n_events bigint, event_date date")
-
-  def readTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(TableSchema).parquet(path)
-
   def quantileSketchRollup(spark: SparkSession, dir: String): DataFrame = {
     val daily = readTable(spark, ensure(spark, dir))
     daily

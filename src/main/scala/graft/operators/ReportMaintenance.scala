@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.Det.{r2, r4}
-import graft.sources.{EventSink, Tables}
 
 /** Incrementally-maintained materialized day-report — the reference's
   * actual serving flow (`[pk]`: the SLR updater polls check results,
@@ -19,7 +19,8 @@ import graft.sources.{EventSink, Tables}
   * rows and any rollup (avg = sum/n included) derives without
   * revisiting raw data.
   *
-  * Maintenance contract (same shape as [[SketchRollup.appendDayFrom]]):
+  * Maintenance contract ([[DayRollup.refreshDays]], shared with
+  * [[SketchRollup]] and [[QuantileRollup]]):
   * refresh recomputes ONLY the affected days from the post-merge sink
   * contents and replaces those days' rows. Because the day row is a
   * pure function of the day's data, replay/backfill/out-of-order
@@ -38,7 +39,7 @@ import graft.sources.{EventSink, Tables}
   * aggregates the raw fixture directly — the strongest form of
   * evidence that incremental maintenance loses nothing.
   */
-object ReportMaintenance {
+object ReportMaintenance extends DayRollup {
 
   /** Bump when the stored state schema changes.
     * v2: table is partitioned by event_date so a refresh swaps ONLY
@@ -46,13 +47,11 @@ object ReportMaintenance {
     */
   val FormatVersion = 2
 
-  /** Deterministic per-corpus location (same convention as
-    * [[SketchRollup.tablePath]]; production would use a managed table).
-    */
-  def tablePath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_report/v${FormatVersion}_$key"
-  }
+  protected val name = "report"
+
+  val TableSchema: StructType = StructType.fromDDL(
+    "event_type string, n bigint, sum_value double, " +
+      "min_value double, max_value double, event_date date")
 
   /** Mergeable per-(event_date, event_type) report state from an
     * events frame (needs ts, event_type, value). One pass, one shuffle
@@ -67,39 +66,7 @@ object ReportMaintenance {
         min("value").as("min_value"),
         max("value").as("max_value"))
 
-  /** Idempotent one-shot build of the persisted report table
-    * (event_date-partitioned so refreshes can swap single days).
-    */
-  def ensure(spark: SparkSession, dir: String): String = synchronized {
-    val path = tablePath(dir)
-    val hPath = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath))
-      dayStats(Tables.events(spark, dir))
-        .write.mode("overwrite").partitionBy("event_date").parquet(path)
-    path
-  }
-
-  /** Recompute the given days from `events` (the post-merge sink — or
-    * any frame with ts/event_type/value) and replace those days' rows
-    * in the report table. Days outside the list are never re-read
-    * (over the date-partitioned sink, [[EventSink.onDays]] prunes
-    * partitions) AND never rewritten: the publish is a DYNAMIC
-    * partition overwrite scoped to the affected `event_date` leaf
-    * partitions, with new files staged by the commit protocol before
-    * the swap — a failed refresh cannot damage unaffected days, and
-    * re-running converges (the day row is a pure function of the
-    * day's data).
-    */
-  def refreshDays(spark: SparkSession, events: DataFrame, days: Seq[String],
-      tablePath: String): Unit = {
-    if (days.isEmpty) return
-    dayStats(EventSink.onDays(events, days))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("event_date")
-      .parquet(tablePath)
-  }
+  def dayRows(events: DataFrame): DataFrame = dayStats(events)
 
   /** Report-on-ingest: the streaming composition — every micro-batch
     * (1) merges into the date-partitioned sink by content key
@@ -128,18 +95,6 @@ object ReportMaintenance {
     * table. avg derives as sum/n; rounding happens at read time so the
     * stored state stays exact and mergeable.
     */
-  /** Stored-table schema, declared so reads survive an EMPTY table:
-    * a partitioned write of zero rows leaves no data files to infer
-    * from (event_date is the partition column).
-    */
-  val TableSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "event_type string, n bigint, sum_value double, " +
-        "min_value double, max_value double, event_date date")
-
-  def readTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(TableSchema).parquet(path)
-
   def sloReportMaintained(spark: SparkSession, dir: String): DataFrame =
     readTable(spark, ensure(spark, dir))
       .select(

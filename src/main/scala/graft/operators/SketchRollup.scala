@@ -2,9 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.SketchFunctions
-import graft.sources.{EventSink, Tables}
+import graft.sources.Tables
 
 /** Pre-aggregated sketch table + rollup — the 100 TB "never re-read
   * raw data" aggregation story, executed rather than argued.
@@ -26,7 +27,7 @@ import graft.sources.{EventSink, Tables}
   * sketch is BIT-IDENTICAL to sketching all raw rows directly, and
   * bounds the estimator error against exact countDistinct.
   */
-object SketchRollup {
+object SketchRollup extends DayRollup {
 
   /** Sketch width: RSD ≈ 1/√(k−2) ≈ 4.4% — cardinality-grade, far
     * wider than the k=64 Jaccard plane (which needs only pair
@@ -40,19 +41,17 @@ object SketchRollup {
     */
   val FormatVersion = 2
 
-  /** Deterministic per-corpus location (same convention as
-    * [[IvfIndex.indexPath]]; production would use a managed table).
-    */
-  def tablePath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_sketch/v${FormatVersion}_${key}_k$K"
-  }
+  protected val name = "sketch"
+  override protected def suffix: String = s"_k$K"
 
-  /** Per-(event_type, event_date) sketch rows from raw events: the
-    * one pass that ever touches the fact table.
+  val TableSchema: StructType = StructType.fromDDL(
+    "event_type string, sig array<bigint>, n_events bigint, event_date date")
+
+  /** Per-(event_type, event_date) sketch rows of an events frame
+    * (event_type, ts, user_id).
     */
-  def dailySketches(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
+  def dayRows(events: DataFrame): DataFrame =
+    events
       .select(col("event_type"), to_date(col("ts")).as("event_date"),
         xxhash64(col("user_id")).as("h"))
       .groupBy("event_type", "event_date")
@@ -60,29 +59,16 @@ object SketchRollup {
         SketchFunctions.minhashAgg(col("h"), K).as("sig"),
         count(lit(1)).as("n_events"))
 
-  /** Idempotent build of the persisted sketch table
-    * (event_date-partitioned so a day refresh swaps single days).
-    */
-  def ensure(spark: SparkSession, dir: String): String = synchronized {
-    val path = tablePath(dir)
-    val hPath = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath))
-      dailySketches(spark, dir)
-        .write.mode("overwrite").partitionBy("event_date").parquet(path)
-    path
-  }
+  /** The one pass over the corpus's raw events. */
+  def dailySketches(spark: SparkSession, dir: String): DataFrame =
+    dayRows(Tables.events(spark, dir))
 
   /** Incremental maintenance — the daily-ETL append: sketch ONLY the
-    * given day's raw events and swap ONLY that day's partition of the
-    * persisted table (dynamic partition overwrite — other days' files
-    * are never touched, and the commit protocol stages new files
-    * before the swap, so a mid-publish crash is recoverable by
-    * re-running the day). Raw data outside `day` is never re-read,
-    * and re-running a day (backfill, retry) is idempotent, so no
-    * rollup can double-count. SketchAggSpec proves day-wise appends
-    * produce a table whose rollup is bit-identical to the one-shot
-    * build.
+    * given day's raw events and swap ONLY that day's partition
+    * ([[refreshDays]]). Raw data outside `day` is never re-read, and
+    * re-running a day (backfill, retry) is idempotent, so no rollup can
+    * double-count. SketchAggSpec proves day-wise appends produce a
+    * table whose rollup is bit-identical to the one-shot build.
     */
   def appendDay(spark: SparkSession, dir: String, day: String, tablePath: String): Unit =
     appendDayFrom(spark, Tables.events(spark, dir), day, tablePath)
@@ -92,19 +78,8 @@ object SketchRollup {
     * post-merge contents instead of the raw fixture layout.
     */
   def appendDayFrom(spark: SparkSession, events: DataFrame, day: String,
-      tablePath: String): Unit = {
-    EventSink.onDays(events, Seq(day))
-      .select(col("event_type"), to_date(col("ts")).as("event_date"),
-        xxhash64(col("user_id")).as("h"))
-      .groupBy("event_type", "event_date")
-      .agg(
-        graft.functions.SketchFunctions.minhashAgg(col("h"), K).as("sig"),
-        count(lit(1)).as("n_events"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("event_date")
-      .parquet(tablePath)
-  }
+      tablePath: String): Unit =
+    refreshDays(spark, events, Seq(day), tablePath)
 
   /** Sketch-on-ingest: the streaming composition of the idempotent
     * upsert sink and incremental sketch maintenance. Every micro-batch
@@ -139,17 +114,6 @@ object SketchRollup {
     * distinct-user estimate per event_type computed ONLY from the
     * persisted per-day sketch table.
     */
-  /** Stored-table schema, declared so reads survive an EMPTY table
-    * (a partitioned write of zero rows leaves no data files to infer
-    * from; event_date is the partition column).
-    */
-  val TableSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "event_type string, sig array<bigint>, n_events bigint, event_date date")
-
-  def readTable(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.schema(TableSchema).parquet(path)
-
   def sketchRollup(spark: SparkSession, dir: String): DataFrame = {
     // one row per (day, type): a single task reads it, with no shuffle
     // for the merge and none for the ordering

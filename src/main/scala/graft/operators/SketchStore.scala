@@ -61,9 +61,7 @@ object SketchStore {
   /** Bump when the stored FORMAT changes (schema, K, tokenizer). */
   val FormatVersion = 1
 
-  def storePath(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_sketches/" +
-      s"v${FormatVersion}_${StoreProtocol.storeKey(dir)}"
+  def storePath(dir: String): String = StoreProtocol.root("sketches", FormatVersion, dir)
 
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -105,32 +103,18 @@ object SketchStore {
       .select(planeSchema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
-  /** Idempotent build-if-missing: base epoch 1 + pointer. */
+  /** Idempotent build-if-missing: base epoch 1 + pointer, rebuilt on a
+    * regenerated documents table, a corrupt pointer or a torn base
+    * ([[StoreProtocol.ensureArtifact]] wipes first, so stale deltas
+    * never duplicate doc-grain rows in the probe union).
+    */
   def ensure(spark: SparkSession, dir: String): String = synchronized {
     val root = storePath(dir)
-    val f = fs(spark, root)
-    // source-regeneration guard (the StoreProtocol stamp): documents
-    // regenerated in place ⇒ wipe and rebuild
-    val d = if (dir.endsWith("/")) dir.dropRight(1) else dir
-    val stamp = StoreProtocol.sourceStamp(f, s"$d/documents.parquet")
-    if (!StoreProtocol.wipeOnSourceChange(f, root, stamp) &&
-        f.exists(new Path(s"$root/CURRENT")) &&
-        !f.exists(new Path(s"$root/SOURCE")))
-      // pre-stamp store: adopt the current stamp so future in-place
-      // regenerations are detected from now on
-      StoreProtocol.writeStamp(f, root, stamp)
-    val ok = readPointer(f, root).exists(p =>
-      f.exists(new Path(s"$root/base/epoch=${p.epoch}/sketches/_SUCCESS")))
-    if (!ok) {
-      // rebuild-from-source: wipe any residue first (a corrupt
-      // pointer self-heals to None — r9 ADVICE — and stale deltas /
-      // commit markers under a fresh epoch-1 base would duplicate
-      // doc-grain rows in the probe union)
-      f.delete(new Path(root), true)
+    StoreProtocol.ensureArtifact(spark, root, dir, "documents", "sketches", epoched = true) {
       sketchRows(Tables.documents(spark, dir))
         .write.mode("overwrite").parquet(s"$root/base/epoch=1/sketches")
-      StoreProtocol.writeStamp(f, root, stamp)
-      writePointer(f, root, StoreProtocol.Initial)
+      writePointer(fs(spark, root), root, StoreProtocol.Initial)
+      true
     }
     root
   }

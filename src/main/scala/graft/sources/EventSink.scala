@@ -75,19 +75,15 @@ object EventSink {
       .sortWithinPartitions("event_date", "event_type", "ts")
     val staging = s"${path}__compact_staging"
     affected.write.partitionBy("event_date").mode("overwrite").parquet(staging)
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    // per-write overwrite mode, as in [[Upsert]]: the session stays untouched
     try {
       spark.read.parquet(staging)
         .repartition(math.max(days.size * filesPerDate, 1),
           col("event_date"), pmod(xxhash64(col("event_id")), lit(filesPerDate)))
         .sortWithinPartitions("event_date", "event_type", "ts")
-        .write.partitionBy("event_date").mode("overwrite").parquet(path)
+        .write.partitionBy("event_date").mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic").parquet(path)
     } finally {
-      prevMode match {
-        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
       val p = new org.apache.hadoop.fs.Path(staging)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }

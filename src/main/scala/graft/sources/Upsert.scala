@@ -190,19 +190,14 @@ object Upsert {
     merged.repartition(col("event_date"))
       .write.partitionBy("event_date").mode("overwrite").parquet(staging)
 
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    // the overwrite mode is a per-write option: a session-wide setting
+    // would leak into concurrent writes on the same session
     try {
       spark.read.parquet(staging)
         .repartition(col("event_date"))
-        .write.partitionBy("event_date").mode("overwrite").parquet(path)
-    } finally {
-      prevMode match {
-        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    }
+        .write.partitionBy("event_date").mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic").parquet(path)
+    } finally fs.delete(new org.apache.hadoop.fs.Path(staging), true)
   }
 
   /** Streaming twin: every micro-batch merges through

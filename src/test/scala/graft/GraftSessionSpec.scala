@@ -73,4 +73,16 @@ class GraftSessionSpec extends SparkTestBase {
     assert(filesWith("extends SparkListener").keySet ++
       filesWith("new SparkListener").keySet == Set("TaskCounters.scala", "ChaosVerify.scala"))
   }
+
+  test("every persisted artifact derives its root and checks completion in StoreProtocol") {
+    val sources = Files.walk(new File("src/main/scala/graft/operators").toPath)
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    def filesWith(needle: String): Set[String] = sources
+      .filter(p => Files.readString(p).contains(needle))
+      .map(_.getFileName.toString).toSet
+    assert(sources.nonEmpty, "run from the project root")
+    assert(filesWith("java.io.tmpdir") == Set("StoreProtocol.scala"))
+    // a `_SUCCESS` inside a string literal is a path built to check it
+    assert(filesWith("_SUCCESS\"") == Set("StoreProtocol.scala"))
+  }
 }

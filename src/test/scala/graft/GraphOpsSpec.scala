@@ -206,6 +206,25 @@ class GraphOpsSpec extends SparkTestBase {
     } finally spark.conf.unset("spark.graft.graph.localEdgeMax")
   }
 
+  // the local BFS holds both directions of every edge, so its cap is
+  // compared against the symmetric row count: a cap between und/2 and
+  // und must route to the iterative plane
+  test("hub_distance: local plane capped by the symmetric row count") {
+    val und = graft.operators.EdgeStore.undirected(spark, sf).count()
+    assert(und > 2)
+    val local = GraphOps.hubDistance(spark, sf).collect().toSeq
+    assert(graft.operators.HubRounds.local, "default cap should run locally")
+    spark.conf.set("spark.graft.graph.localEdgeMax", (und - 1).toString)
+    try {
+      assert(GraphOps.hubDistance(spark, sf).collect().toSeq == local)
+      assert(!graft.operators.HubRounds.local,
+        s"cap ${und - 1} < $und symmetric rows still ran the one-task plane")
+      spark.conf.set("spark.graft.graph.localEdgeMax", und.toString)
+      GraphOps.hubDistance(spark, sf).collect()
+      assert(graft.operators.HubRounds.local)
+    } finally spark.conf.unset("spark.graft.graph.localEdgeMax")
+  }
+
   // r11: every pagerank plane must produce the same report on one
   // fixture — local (the default at this SF), mid (co-partitioned
   // SHJ loop), big-broadcast (zero-edge-shuffle symmetric-contrib
