@@ -258,6 +258,21 @@ class EdgeStoreSpec extends SparkTestBase {
     assert(und(dirD) == truth, "empty ad-hoc append changed the adjacency")
   }
 
+  test("source regenerated in place triggers a rebuild (no stale store served)") {
+    val li = graft.sources.Tables.lineitem(spark, sf)
+    val dirR = java.nio.file.Files.createTempDirectory("graft_edges_regen").toString
+    li.filter(col("l_orderkey") % 2 === 0)
+      .write.mode("overwrite").parquet(s"$dirR/lineitem.parquet")
+    val n1 = EdgeStore.undirected(spark, dirR).count()
+    // regenerate the SAME dir with different data — the stamp guard
+    // must wipe and rebuild instead of serving the old adjacency
+    li.write.mode("overwrite").parquet(s"$dirR/lineitem.parquet")
+    spark.catalog.refreshTable(EdgeStore.tableName(dirR))
+    val n2 = EdgeStore.undirected(spark, dirR).count()
+    val full = EdgeStore.undirected(spark, sf).count()
+    assert(n2 == full, s"regenerated source served stale store: $n2 != $full (old $n1)")
+  }
+
   test("streamingAppend maintains the adjacency exactly-once across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -124,6 +124,18 @@ class SketchStoreSpec extends SparkTestBase {
     assert(killList(dirB) == truth, "gc retry changed the store")
   }
 
+  test("source regenerated in place triggers a rebuild (no stale store served)") {
+    val docs = docsOf(sf)
+    val dirR = java.nio.file.Files.createTempDirectory("graft_sk_regen").toString
+    docs.filter(col("doc_id") % 2 === 0)
+      .write.mode("overwrite").parquet(s"$dirR/documents.parquet")
+    val n1 = SketchStore.sketches(spark, dirR).count()
+    docs.write.mode("overwrite").parquet(s"$dirR/documents.parquet")
+    val n2 = SketchStore.sketches(spark, dirR).count()
+    assert(n2 == docs.count(),
+      s"regenerated source served stale sketch store: $n2 (old $n1)")
+  }
+
   test("streamingAppend maintains the sketch plane exactly-once") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
