@@ -29,6 +29,9 @@ object Bench {
     * once so the nine graph queries probe a bucketed table
     * exchange-free; SketchStore (r9) runs the corpus explode + 64-min
     * signature aggregate once for the text-dedup/containment queries.
+    * Each build's wall ms, jobs and spill land in `bench_out.json`
+    * under `stores` (a store served from disk shows its probe cost; a
+    * cold build needs its root removed first — see README).
     */
   val Stores: Seq[(String, (SparkSession, String) => Any)] = Seq(
     "IvfIndex" -> ((s, d) => graft.operators.IvfIndex.ensure(s, d, npivots = 8)),
@@ -81,7 +84,9 @@ object Bench {
     // would otherwise move silently into the timed pass.
     val stores = Stores.map { case (name, ensure) =>
       val t0 = System.nanoTime()
-      val err = try { ensure(spark, sfDir); None } catch { case e: Throwable =>
+      val err = try {
+        TaskCounters.tagged(sc, s"store:$name")(ensure(spark, sfDir)); None
+      } catch { case e: Throwable =>
         System.err.println(s"bench: store $name failed to build: $e")
         Some(e.toString)
       }
@@ -120,13 +125,6 @@ object Bench {
         // leak pressure, not the query.
         // blocking: async removal would land inside the NEXT pass's
         // clock — pay it here, between measurements.
-        // SharedFrames guard (r6 ADVICE): a session-shared
-        // localCheckpoint frame's blocks MUST NOT be dropped behind
-        // the cache's back (lineage is cut — the frame would be
-        // irrecoverable, not recomputed), so when sharing is on,
-        // evict the cache entries alongside their blocks.
-        if (graft.sources.SharedFrames.enabled(spark))
-          graft.sources.SharedFrames.clear(spark)
         sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
         dt
       }
@@ -170,7 +168,9 @@ object Bench {
         errors.get(k).map(e => s""","error":${jsonString(e)}""").getOrElse("") + "}"
     }.mkString("{", ",", "}")
     val storeJson = stores.map { case (k, (ms, err)) =>
-      jsonString(k) + s""":{"build_ms":$ms""" +
+      val c = counters.of(s"store:$k")
+      jsonString(k) + s""":{"build_ms":$ms,"jobs":${c.jobs},""" +
+        s""""spill_mb":${c.spillBytes >> 20}""" +
         err.map(e => s""","error":${jsonString(e)}""").getOrElse("") + "}"
     }.mkString("{", ",", "}")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")

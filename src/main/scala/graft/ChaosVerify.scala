@@ -37,14 +37,10 @@ import org.apache.spark.sql.{Row, SparkSession}
   *    exactly the class whose buffer-merge restrictions could
   *    misbehave under task re-attempt; identical output proves the
   *    running composition is re-attempt-safe;
-  *  - `triangle_parts` WITH `spark.graft.sharedFrames=true` — the
-  *    session-shared supportEdges frame is built once (baseline run)
-  *    and served from cache to the chaos run; because [[graft
-  *    .operators.Checkpoints.cut]] is on the RELIABLE plane here,
-  *    the cached frame's blocks live in the checkpoint store, so
-  *    killing the executor that helped build it must NOT poison
-  *    later consumers (the r6-ADVICE Bench-hygiene concern, proven
-  *    as a positive property).
+  *  - `triangle_parts` — the graph pack's probe of the persisted
+  *    [[graft.operators.EdgeStore]]: the baseline run builds (or
+  *    serves) the store and the chaos run reads it again, so killing
+  *    an executor mid-probe must not change the query's result.
   *
   * Determinism claim being tested: every query is a pure function of
   * its input partitions, so re-executed tasks reproduce their
@@ -127,11 +123,7 @@ object ChaosVerify {
         // transformWithState query, which requires the RocksDB store —
         // the same provider every streaming suite uses
         "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        // shared-frames consumer under chaos (r6 verdict #8): the
-        // cached supportEdges frame must survive executor loss because
-        // the cut above routes it to the reliable store
-        "spark.graft.sharedFrames" -> "true"))
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     spark.sparkContext.setLogLevel("ERROR")
 
     @volatile var removed = 0

@@ -204,7 +204,8 @@ object SparkEntry {
     "srp_near_dup" -> (AnnOps.srpNearDup _),
     "salted_join" -> (SkewOps.saltedJoinQuery _),
     // r6: the hot-key-only salted join (measured 2.1x crossover in
-    // SkewBench) through the same oracle-hash gate (full oracle)
+    // BASELINE.md's round-6 skew addendum) through the same
+    // oracle-hash gate (full oracle)
     "salted_hot_join" -> (SkewOps.saltedHotJoinQuery _),
     "ann_knn_join" -> (AnnOps.annKnnJoin _),
     "curate_corpus_neardup" -> (TextOps.curateCorpusNearDup _),

@@ -334,9 +334,8 @@ object EdgeStore {
     * Marker discipline: `PUBLISHED` is deleted FIRST and written LAST,
     * so a crash anywhere inside leaves the marker absent/stale and
     * every probe takes the merge-on-read path until repaired. Ends by
-    * invalidating session state that resolved the OLD files (catalog
-    * file listings and the SharedFrames supportEdges frame) — the r8
-    * ADVICE staleness bug.
+    * refreshing the catalog file listings that resolved the OLD files
+    * — the r8 ADVICE staleness bug.
     */
   private def publishBase(spark: SparkSession, dir: String): Unit = {
     val root = storePath(dir)
@@ -366,14 +365,13 @@ object EdgeStore {
     invalidate(spark, dir)
   }
 
-  /** Drop session state that resolved the pre-change store files:
-    * catalog file listings and the SharedFrames supportEdges frame.
+  /** Refresh the catalog file listings that resolved the pre-change
+    * store files.
     */
   private def invalidate(spark: SparkSession, dir: String): Unit = {
     Seq(tableName(dir), weightedTableName(dir), packedTableName(dir)).foreach { t =>
       if (spark.catalog.tableExists(t)) spark.catalog.refreshTable(t)
     }
-    graft.sources.SharedFrames.remove(spark, s"supportEdges:$dir")
   }
 
   /** Is the published cache servable for pointer state `p` — derived
@@ -604,7 +602,9 @@ object EdgeStore {
   /** The canonical (a < b) support-edge frame — the same table with
     * the x < y half selected; alias-projected, so the scan's bucket
     * partitioning on x propagates to `a` and downstream joins keyed
-    * on `a` stay exchange-free.
+    * on `a` stay exchange-free. The graph-pack consumers read it
+    * directly: the parquet store is the materialization, so no
+    * lineage cut is needed.
     */
   def canonical(spark: SparkSession, dir: String): DataFrame =
     undirected(spark, dir)

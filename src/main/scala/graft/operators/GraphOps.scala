@@ -447,23 +447,6 @@ object GraphOps {
       .orderBy("lang", "cluster_id")
   }
 
-  /** The ≥2-support co-purchase edge list (a < b, one row per
-    * undirected edge) — shared by the nine graph-pack consumers.
-    * Since r8 this PROBES the persisted [[EdgeStore]] (the IvfIndex
-    * pattern: the audited lineitem self-join runs ONCE as ingest-time
-    * DDL, and every query reads the bucketed edge table with zero
-    * corpus-sized work) instead of rebuilding the self-join per
-    * session. The parquet store IS the materialization, so no
-    * lineage cut is needed; the SharedFrames wrapper stays so a
-    * session with `spark.graft.sharedFrames=true` also reuses the
-    * resolved frame object (CachedFramesSpec pins hash-identical
-    * results + exactly one resolve).
-    */
-  private[operators] def supportEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.SharedFrames.getOrBuild(spark, s"supportEdges:$dir") {
-      EdgeStore.canonical(spark, dir)
-    }
-
   /** Node degrees of the support graph, computed on the BUCKETED
     * undirected adjacency: groupBy on the bucket column aggregates
     * on the scan's own HashPartitioning — no exchange (pinned).
@@ -507,7 +490,7 @@ object GraphOps {
     * on the degree frame, not by materializing wedges.
     */
   def triangleParts(spark: SparkSession, dir: String): DataFrame = {
-    val e = supportEdges(spark, dir) // bucketed edge-store scan
+    val e = EdgeStore.canonical(spark, dir) // bucketed edge-store scan
     val deg = degrees(spark, dir) // exchange-free off the bucketed store
     // orient low→high in the (deg, id) total order; carry the target's
     // ord key so the wedge condition needs no extra join
@@ -567,7 +550,7 @@ object GraphOps {
     * scale (the chi2 lesson).
     */
   def degreeAssortativity(spark: SparkSession, dir: String): DataFrame = {
-    val e = supportEdges(spark, dir) // bucketed edge-store scan
+    val e = EdgeStore.canonical(spark, dir) // bucketed edge-store scan
     val deg = degrees(spark, dir) // exchange-free off the bucketed store
     val j = e
       .join(deg.select(col("n").as("a"), col("deg").as("da")), Seq("a"))
@@ -616,7 +599,7 @@ object GraphOps {
     */
   def kcoreParts(spark: SparkSession, dir: String): DataFrame = {
     val k = 3
-    var cur = supportEdges(spark, dir)
+    var cur = EdgeStore.canonical(spark, dir)
     var prevCount = cur.count()
     // Local regime (r10, same rationale as [[connectedComponents]]'s
     // local union-find): the support graph is dimension-sized (~4 k
@@ -723,22 +706,21 @@ object GraphOps {
     * wedge CENTERS above a degree ceiling (they connect everything
     * to everything and carry no signal) — wired as
     * [[commonNeighborRecsCapped]] with a spec pinning recall against
-    * this exact form; the 5th consumer of the session-shared
-    * supportEdges frame.
+    * this exact form.
     */
   def commonNeighborRecs(spark: SparkSession, dir: String): DataFrame =
-    recsFromFrames(supportEdges(spark, dir), undirected(spark, dir),
+    recsFromFrames(EdgeStore.canonical(spark, dir), undirected(spark, dir),
       degrees(spark, dir), cap = None)
 
   /** The wedge-candidate link-prediction plan over explicit (e, und,
-    * deg) frames — shared by the two declared queries and GraphBench
-    * (which feeds synthetic hub-dense graphs to measure the cap's
-    * wall-clock crossover). `cap`: Some(c) folds the hub cap into the
-    * wedge build side as a count-over-(partition x) window (no
-    * semi-join — the window rides the adjacency's partitioning);
-    * None is the exact Σ deg² form.
+    * deg) frames — shared by the two declared queries (the cap's
+    * wall-clock crossover on synthetic hub-dense graphs is the
+    * "Hub-cap TIME crossover" addendum in BASELINE.md). `cap`: Some(c)
+    * folds the hub cap into the wedge build side as a
+    * count-over-(partition x) window (no semi-join — the window rides
+    * the adjacency's partitioning); None is the exact Σ deg² form.
     */
-  private[graft] def recsFromFrames(e: DataFrame, und: DataFrame,
+  private def recsFromFrames(e: DataFrame, und: DataFrame,
       deg: DataFrame, cap: Option[Int]): DataFrame = {
     val adj = cap match {
       case Some(c) =>
@@ -783,8 +765,8 @@ object GraphOps {
     * generation, not in the score's meaning). Deterministic total
     * order as in the uncapped form. GraphOpsSpec pins (a) exact
     * equality with [[commonNeighborRecs]] when the cap doesn't bind
-    * and (b) candidate recall when it does; the bench SkewBench-style
-    * row shows the Σ deg² flattening.
+    * and (b) candidate recall when it does; the "Hub-cap TIME
+    * crossover" addendum in BASELINE.md shows the Σ deg² flattening.
     *
     * r8 (the r7 verdict's crossover ask): the center filter is FOLDED
     * into the wedge join's build side — a count-over-(partition x)
@@ -795,12 +777,12 @@ object GraphOps {
     * wedge self-join with the same zero-exchange partitioning the
     * uncapped form enjoys — the semi-join exchange that made capped
     * SLOWER than uncapped at sf0.1 in the r7 verdict's run is gone
-    * (GraphBench measures the crossover; EdgeStoreSpec pins the
-    * window-not-join shape).
+    * (BASELINE.md's "Hub-cap TIME crossover" addendum measured the
+    * crossover; EdgeStoreSpec pins the window-not-join shape).
     */
   def commonNeighborRecsCapped(spark: SparkSession, dir: String,
       cap: Int = 10): DataFrame =
-    recsFromFrames(supportEdges(spark, dir), undirected(spark, dir),
+    recsFromFrames(EdgeStore.canonical(spark, dir), undirected(spark, dir),
       degrees(spark, dir), cap = Some(cap))
 
   /** `hub_distance` — BFS hop-distance distribution from the graph's
@@ -937,7 +919,7 @@ object GraphOps {
     * degree-ordered plan.
     */
   def clusteringCoeff(spark: SparkSession, dir: String): DataFrame = {
-    val e = supportEdges(spark, dir) // bucketed edge-store scan
+    val e = EdgeStore.canonical(spark, dir) // bucketed edge-store scan
     val deg = degrees(spark, dir) // exchange-free off the bucketed store
     val eo = e
       .join(deg.withColumnRenamed("n", "a").withColumnRenamed("deg", "da"), Seq("a"))
@@ -988,7 +970,7 @@ object GraphOps {
     * even though the tied node ids are interchangeable.
     */
   def hillTailIndex(spark: SparkSession, dir: String): DataFrame = {
-    val e = supportEdges(spark, dir) // bucketed edge-store scan
+    val e = EdgeStore.canonical(spark, dir) // bucketed edge-store scan
     val deg = degrees(spark, dir) // exchange-free off the bucketed store
     val top = deg.orderBy(col("deg").desc, col("n")).limit(51)
     val w = org.apache.spark.sql.expressions.Window

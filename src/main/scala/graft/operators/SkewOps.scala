@@ -40,8 +40,9 @@ object SkewOps {
     * turned into a cut); the probe splits into a cold lane (plain
     * equi-join) and a hot lane where only the HOT keys' build rows
     * replicate ×salt — replication cost O(|hot keys| × salt), not
-    * O(|build| × salt). Row-identical to the plain join (SkewBench
-    * asserts it; same argument as [[saltedEquiJoin]]).
+    * O(|build| × salt). Row-identical to the plain join (ScaleOpsSpec
+    * pins it on both sides of the hot threshold; same argument as
+    * [[saltedEquiJoin]]).
     *
     * The hot-key frame is collected to the driver — bounded by
     * construction: at threshold t over n probe rows there are ≤ n/t
@@ -93,8 +94,9 @@ object SkewOps {
     * `salted_join`): the same supplier-nation rollup through
     * [[saltedHotKeyJoin]] at threshold 500 — suppliers above ~500
     * lines take the salted lane, the rest the plain lane, so the
-    * oracle match exercises the lane SPLIT too (SkewBench carries the
-    * measured 2.1× crossover vs whole-build salting).
+    * oracle match exercises the lane SPLIT too (the measured 2.1×
+    * crossover vs whole-build salting is BASELINE.md's "Round-6
+    * addendum: measured skew-join crossover").
     */
   def saltedHotJoinQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Det.r2

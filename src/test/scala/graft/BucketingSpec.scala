@@ -74,7 +74,8 @@ class BucketingSpec extends SparkTestBase {
       val plain = joined(orders, lineitem).collect()
       assert(rows.toSeq == plain.toSeq, "bucketed join changed results")
 
-      // STAR variant (JoinBench's steady-state shape): add the
+      // STAR variant (the steady-state shape of BASELINE.md's
+      // round-3 join-strategy addendum): add the
       // customer hop + an agg on a non-bucket key. The fact⋈fact hop
       // must STAY exchange-free inside the bigger plan — bucketing
       // that only survives a 2-table toy plan would be useless.

@@ -11,7 +11,7 @@ import scala.sys.process._
   * `local-cluster[2,4]` master and compares each of five
   * representative queries (shuffle-heavy / iterative-checkpointed /
   * TypedImperativeAggregate sketch / the Affine2Compose recurrence
-  * plane / a shared-frames consumer — the last two added per the r6
+  * plane / an edge-store probe — the last two added per the r6
   * verdict) against its healthy-cluster baseline. The spec asserts
   * the child's JSON proves the chaos was REAL (kills ≥ 5,
   * executor-removed events observed, task failures recorded — a run

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 
 /** The session factory's pure parts, checked without a session (the
   * suite shares one TestSpark session; [[GraftSession.create]] is never
-  * called here), plus the guard that keeps every main on the factory.
+  * called here), plus the source-scan guards that keep every main on
+  * the factory and fix the set of mains and `spark.graft.*` conf keys.
   */
 class GraftSessionSpec extends SparkTestBase {
   private val Split = "spark.sql.files.maxPartitionBytes"
@@ -72,6 +73,20 @@ class GraftSessionSpec extends SparkTestBase {
     // a counter
     assert(filesWith("extends SparkListener").keySet ++
       filesWith("new SparkListener").keySet == Set("TaskCounters.scala", "ChaosVerify.scala"))
+    // the five mains; one-off benchmark mains are not regrown (their
+    // measurements live in BASELINE.md, per-query A/B runs through
+    // Bench's SPARK_GRAFT_ONLY / SPARK_GRAFT_EXTRA_CONFS). The full
+    // signature: ReportMaintenance.maintainOnIngest matches a bare
+    // `def main`.
+    assert(filesWith("def main(args: Array[String])").keySet == Set("Bench.scala",
+      "Verify.scala", "PlanSnap.scala", "ClusterVerify.scala", "ChaosVerify.scala"))
+    // every `spark.graft.*` conf key main code names, in one list
+    val confKeys = sources.flatMap { p =>
+      "\"spark\\.graft\\.([^\"]*)\"".r.findAllMatchIn(Files.readString(p)).map(_.group(1))
+    }.toSet
+    assert(confKeys == Set("checkpointDir", "nativeDotRewrite.enabled",
+      "nanosPushdown.enabled", "graph.localBytesMax", "graph.localEdgeMax",
+      "graph.pagerankMidMax", "graph.pagerankBroadcastNodeMax"))
   }
 
   test("every persisted artifact derives its root and checks completion in StoreProtocol") {

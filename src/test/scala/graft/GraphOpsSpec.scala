@@ -254,8 +254,8 @@ class GraphOpsSpec extends SparkTestBase {
   test("common_neighbor_recs: no recommended pair is an existing edge; scores are consistent") {
     val recs = GraphOps.commonNeighborRecs(spark, sf).collect()
     assert(recs.length == 10)
-    // rebuild the >=2-support edge set independently (supportEdges is
-    // operators-private; an independent build doubles as a probe)
+    // rebuild the >=2-support edge set from lineitem, independently of
+    // the edge store (an independent build doubles as a probe)
     val li = graft.sources.Tables.lineitem(spark, sf)
       .select("l_orderkey", "l_partkey")
     val edges = li.as("x").join(li.as("y"),
