@@ -1,9 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, to_date}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.{EventSink, Tables}
+import graft.sources.{EventSink, Tables, Upsert}
 
 /** An event-day rollup ([[SketchRollup]], [[QuantileRollup]],
   * [[ReportMaintenance]]): a persisted table of per-(event_type,
@@ -67,6 +69,37 @@ trait DayRollup {
   def refreshDays(spark: SparkSession, events: DataFrame, days: Seq[String],
       tablePath: String): Unit =
     if (days.nonEmpty) write(dayRows(EventSink.onDays(events, days)), tablePath, "dynamic")
+
+  /** One day's [[refreshDays]]: the daily-ETL append. Re-running a
+    * day (backfill, retry) is idempotent, so no rollup can double-count.
+    */
+  def appendDayFrom(spark: SparkSession, events: DataFrame, day: String,
+      tablePath: String): Unit =
+    refreshDays(spark, events, Seq(day), tablePath)
+
+  /** Maintain-on-ingest, the one streaming-ingest loop (the reference
+    * updater: poll → upsert → refresh the persisted rollup). Every
+    * micro-batch
+    *   1. merges into the date-partitioned sink by content key
+    *      ([[Upsert.upsertDatePartitioned]]; replays are no-ops), then
+    *   2. refreshes the batch's days in one [[refreshDays]], read from
+    *      the SINK's post-merge contents, not from the batch.
+    * Each day row is a pure function of the merged day, so replay,
+    * out-of-order delivery and backfills converge to the one-shot
+    * build (ReportMaintenanceSpec, SketchAggSpec).
+    */
+  def maintainOnIngest(stream: DataFrame, sinkPath: String, tablePath: String,
+      keys: Seq[String], checkpoint: String): StreamingQuery =
+    stream.writeStream
+      .foreachBatch { (df: DataFrame, _: Long) =>
+        val spark = df.sparkSession
+        Upsert.upsertDatePartitioned(spark, sinkPath, df, keys)
+        val days = df.select(to_date(col("ts")).as("d")).distinct()
+          .collect().map(_.getDate(0).toString).toSeq
+        refreshDays(spark, spark.read.parquet(sinkPath), days, tablePath)
+      }
+      .option("checkpointLocation", checkpoint)
+      .start()
 
   /** The one partitioned write: "static" replaces the whole table and
     * leaves its `_SUCCESS`, "dynamic" swaps only the written days and

@@ -954,16 +954,11 @@ object LlmQueries {
       driftTokenCounts(Tables.documents(spark, dir)).cut())
 
   /** The per-token side-count aggregation stage of
-    * [[tokenDriftMovers]] — ONE shared running aggregate (vocab-grain
-    * state, bounded), which is exactly what makes it streamable: the
-    * streaming twin ([[graft.streaming.StreamingQueries
-    * .driftTokenCounts]], the psi_drift playbook) runs THIS
-    * aggregation incrementally in complete mode and reads the movers
-    * through the same [[driftMoversFromCounts]] finisher, so a live
-    * drift alarm and the nightly report share arithmetic by
-    * construction (StreamingSpec pins the equivalence).
+    * [[tokenDriftMovers]]: ONE running aggregate with vocab-grain,
+    * bounded state, read through the [[driftMoversFromCounts]]
+    * finisher.
     */
-  def driftTokenCounts(docs: DataFrame): DataFrame =
+  private def driftTokenCounts(docs: DataFrame): DataFrame =
     docs
       .withColumn("side", when((instr(lit("0123456789abcdef"),
         substring(md5(col("doc_id").cast("string")), 1, 1)) - 1) < 8,
@@ -978,7 +973,7 @@ object LlmQueries {
     * frame: smoothed log-ratio, min-support 20, top-20 by |ratio| on
     * the 1e-6 grid with token tie-breaks.
     */
-  def driftMoversFromCounts(counts: DataFrame): DataFrame = {
+  private def driftMoversFromCounts(counts: DataFrame): DataFrame = {
     val tot = counts.agg(sum("c_old").as("n_old"), sum("c_new").as("n_new"),
       count(lit(1)).as("v"))
     counts.filter(col("c_old") + col("c_new") >= 20)

@@ -51,17 +51,6 @@ object QuantileRollup extends DayRollup {
   def dailySketches(spark: SparkSession, dir: String): DataFrame =
     dayRows(Tables.events(spark, dir))
 
-  /** Incremental maintenance — the daily-ETL append (mirror of
-    * [[SketchRollup.appendDayFrom]]): sketch ONLY the given day's rows
-    * and swap ONLY that day's partition ([[refreshDays]]). Re-running a
-    * day is idempotent, so backfills and retries can never
-    * double-count, and QuantileSketchSpec proves day-wise builds
-    * answer quantiles within the same ε bound as one-shot builds.
-    */
-  def appendDayFrom(spark: SparkSession, events: DataFrame, day: String,
-      tablePath: String): Unit =
-    refreshDays(spark, events, Seq(day), tablePath)
-
   /** Declared query `quantile_sketch_rollup` (rows-only: GK sketch
     * internals have no DuckDB mirror; the ε rank bound is asserted in
     * QuantileSketchSpec): all-time p50/p90/p99 per event_type computed

@@ -68,27 +68,6 @@ object ReportMaintenance extends DayRollup {
 
   def dayRows(events: DataFrame): DataFrame = dayStats(events)
 
-  /** Report-on-ingest: the streaming composition — every micro-batch
-    * (1) merges into the date-partitioned sink by content key
-    * ([[graft.sources.Upsert.upsertDatePartitioned]], replay-safe),
-    * then (2) refreshes each AFFECTED day's report row from the SINK's
-    * post-merge contents. This is the reference updater loop itself:
-    * poll → upsert IndicatorValue → refresh the persisted report.
-    */
-  def maintainOnIngest(stream: DataFrame, sinkPath: String, reportPath: String,
-      keys: Seq[String], checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val spark = df.sparkSession
-        graft.sources.Upsert.upsertDatePartitioned(spark, sinkPath, df, keys)
-        val days = df.select(to_date(col("ts")).as("d")).distinct()
-          .collect().map(_.getDate(0).toString)
-        refreshDays(spark, spark.read.parquet(sinkPath), days.toSeq, reportPath)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-
   /** Declared query `slo_report_maintained` (FULL DuckDB oracle — the
     * same aggregation as `slo_day_report` computed directly over the
     * raw fixture): the day report served entirely from the maintained

@@ -63,51 +63,6 @@ object SketchRollup extends DayRollup {
   def dailySketches(spark: SparkSession, dir: String): DataFrame =
     dayRows(Tables.events(spark, dir))
 
-  /** Incremental maintenance — the daily-ETL append: sketch ONLY the
-    * given day's raw events and swap ONLY that day's partition
-    * ([[refreshDays]]). Raw data outside `day` is never re-read, and
-    * re-running a day (backfill, retry) is idempotent, so no rollup can
-    * double-count. SketchAggSpec proves day-wise appends produce a
-    * table whose rollup is bit-identical to the one-shot build.
-    */
-  def appendDay(spark: SparkSession, dir: String, day: String, tablePath: String): Unit =
-    appendDayFrom(spark, Tables.events(spark, dir), day, tablePath)
-
-  /** [[appendDay]] over an arbitrary events frame (needs event_type,
-    * ts, user_id) — lets the streaming ingest sketch from the SINK's
-    * post-merge contents instead of the raw fixture layout.
-    */
-  def appendDayFrom(spark: SparkSession, events: DataFrame, day: String,
-      tablePath: String): Unit =
-    refreshDays(spark, events, Seq(day), tablePath)
-
-  /** Sketch-on-ingest: the streaming composition of the idempotent
-    * upsert sink and incremental sketch maintenance. Every micro-batch
-    *   1. merges into the date-partitioned sink by content key
-    *      ([[graft.sources.Upsert.upsertDatePartitioned]] — replays
-    *      are no-ops), then
-    *   2. re-sketches each AFFECTED day from the SINK's post-merge
-    *      contents (not from the batch!) via [[appendDayFrom]].
-    * Sketching from the sink makes the sketch row a pure function of
-    * the merged day — batch replay, out-of-order delivery, and
-    * backfills all converge to the same sketch table the one-shot
-    * batch build would produce (proven in SketchAggSpec).
-    */
-  def streamingIngest(stream: DataFrame, sinkPath: String, sketchPath: String,
-      keys: Seq[String], checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val spark = df.sparkSession
-        graft.sources.Upsert.upsertDatePartitioned(spark, sinkPath, df, keys)
-        val days = df.select(to_date(col("ts")).as("d")).distinct()
-          .collect().map(_.getDate(0).toString)
-        val sink = spark.read.parquet(sinkPath)
-        days.foreach(d => appendDayFrom(spark, sink, d, sketchPath))
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-
   /** Declared query `sketch_rollup` (rows-only: xxhash64-derived
     * sketch internals have no DuckDB mirror; the estimator bound and
     * bit-exact mergeability are asserted in SketchAggSpec): all-time

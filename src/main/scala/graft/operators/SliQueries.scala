@@ -146,8 +146,7 @@ object SliQueries {
   /** Sessionization core: assigns a dense per-user `session_id`
     * (1..n) using a 30-minute inactivity gap. Input needs `user_id`,
     * `ts` (timestamp), `event_id` (tie-break). Two window passes over
-    * one `user_id` shuffle. Exposed for property tests (gap law) and
-    * for the streaming twin's batch-equivalence check.
+    * one `user_id` shuffle. Exposed for property tests (gap law).
     */
   def sessionized(ev: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
@@ -293,8 +292,8 @@ object SliQueries {
       .orderBy("week")
   }
 
-  /** #10 — tumbling 1-hour aggregation (batch twin of the streaming
-    * updater cadence; see graft.streaming for the readStream twin).
+  /** #10 — tumbling 1-hour aggregation (the streaming updater
+    * cadence, run as a batch report).
     */
   def sloHourlyTumble(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
@@ -1597,13 +1596,11 @@ object SliQueries {
     psiFromBuckets(psiBucketCounts(Tables.events(spark, dir)))
 
   /** The ONE corpus-sized stage of [[psiDrift]]: collapse events into
-    * (type, bucket) conditional counts for the two halves. Shared
-    * with the STREAMING twin (StreamingQueries.psiBuckets runs this
-    * exact aggregation incrementally — a plain running agg, no
-    * window), so the live drift monitor and the batch report are the
-    * same arithmetic by construction.
+    * (type, bucket) conditional counts for the two halves. A plain
+    * running aggregate with no window, so the same expression would
+    * run incrementally on a stream.
     */
-  private[graft] def psiBucketCounts(events: DataFrame): DataFrame = {
+  private def psiBucketCounts(events: DataFrame): DataFrame = {
     val cut = lit("2024-01-16").cast("timestamp")
     events
       .groupBy(col("event_type"),
@@ -1616,9 +1613,9 @@ object SliQueries {
 
   /** The bounded PSI finisher over a (type, bucket, n1, n2) frame
     * (≤ |types|·20 rows — per-type totals, Laplace smoothing, the
-    * PSI sum). Batch and stream both read their counts through this.
+    * PSI sum).
     */
-  private[graft] def psiFromBuckets(b: DataFrame): DataFrame = {
+  private def psiFromBuckets(b: DataFrame): DataFrame = {
     val t = b.groupBy("event_type")
       .agg(sum("n1").as("t1"), sum("n2").as("t2"),
         count(lit(1)).as("nb"))

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Idempotent upsert/backfill into the date-partitioned event sink —
   * the reference's `IndicatorValue` bulk-upsert semantics (unique
@@ -31,9 +30,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Idempotency: re-running any batch (or replaying a failed one) is a
   * no-op by construction — every batch row replaces itself. That is
-  * exactly the contract `foreachBatch` needs ([[streamingUpsert]]):
-  * structured streaming guarantees at-least-once batch delivery, so
-  * the sink function must tolerate replays.
+  * exactly the contract `foreachBatch` needs
+  * ([[graft.operators.DayRollup.maintainOnIngest]]): structured
+  * streaming guarantees at-least-once batch delivery, so the sink
+  * function must tolerate replays.
   *
   * Concurrent writers: plain parquet has no optimistic concurrency,
   * so two simultaneous merges into one sink (say a streaming ingest
@@ -52,6 +52,25 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * retries briefly then fails LOUDLY with the holder's identity;
   * stale locks (a crashed writer) are detected by age and broken.
   * UpsertSpec proves serialized concurrent merges lose nothing.
+  *
+  * Table-format mapping (Iceberg/Delta; no jars in this build, so the
+  * parquet path is the only implementation):
+  *   - [[upsertDatePartitioned]] → `MERGE INTO t USING batch ON <keys>
+  *     WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`
+  *     (Iceberg and Delta verbatim). The staging hop and the lock file
+  *     exist ONLY because plain parquet has no commit protocol: the
+  *     format's optimistic-concurrency snapshot commit replaces both
+  *     (a conflicting committer retries on the new snapshot instead of
+  *     queueing on a lock).
+  *   - [[EventSink.compactDates]] → Iceberg `rewrite_data_files` /
+  *     Delta `OPTIMIZE`, with the same per-partition scoping and the
+  *     cluster-by columns becoming the format's sort order.
+  *   - [[EventSink.readDatePartitioned]] → a catalog table read;
+  *     snapshot isolation makes "never read a half-published merge"
+  *     free instead of staged.
+  *   - the streaming loop stays the same foreachBatch MERGE: every
+  *     batch row still replaces itself, so at-least-once delivery
+  *     keeps its exactly-once effect.
   */
 object Upsert {
 
@@ -199,18 +218,4 @@ object Upsert {
         .option("partitionOverwriteMode", "dynamic").parquet(path)
     } finally fs.delete(new org.apache.hadoop.fs.Path(staging), true)
   }
-
-  /** Streaming twin: every micro-batch merges through
-    * [[upsertDatePartitioned]], making the sink idempotent under
-    * batch replay (at-least-once delivery → exactly-once effect on
-    * the keyed contents).
-    */
-  def streamingUpsert(stream: DataFrame, path: String, keys: Seq[String],
-      checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        upsertDatePartitioned(df.sparkSession, path, df, keys)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
 }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming._
   * fold in ascending (ts, event_id) order (sorted here); a row at or
   * before the key's last applied position is LATE and dropped — an
   * SCD2 current-row cannot be rewound without replay (that replay IS
-  * the batch twin). Same convention as HoltStream.
+  * the batch twin).
   */
 class Scd2Processor
   extends StatefulProcessor[Long, Scd2Stream.Evt, Scd2Stream.ClosedVersion] {

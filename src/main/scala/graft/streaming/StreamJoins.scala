@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.functions.Det.r2
 import graft.sources.Tables
 
-/** Stream-stream and stream-static joins — the remaining join class
-  * of the streaming surface (StreamingQueries covers windows/sessions/
-  * dedup; StatefulSessions covers custom state).
+/** Stream-stream and stream-static joins — the join class of the
+  * streaming surface ([[BurnRateStream]] covers windowed alerts and
+  * delivery dedup; [[Scd2Stream]] covers custom state).
   *
   * The core is ONE expression ([[viewPurchasePairs]]) valid in both
   * execution modes: `withWatermark` is a no-op on batch frames

@@ -2,18 +2,16 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{EventSink, MergeTableFormat, Tables}
+import graft.sources.{EventSink, Tables}
 
-/** Small-file compaction of the date-partitioned sink, proven
-  * THROUGH the table-format seam ([[graft.sources.MergeTableFormat]]
-  * — an Iceberg `rewrite_data_files` / Delta `OPTIMIZE` backend
-  * inherits this contract): content identity, per-date file-count
-  * cap, untouched-partition stability, idempotency, and the
-  * (event_type, ts) clustering that makes row-group stats selective.
+/** Small-file compaction of the date-partitioned sink
+  * ([[graft.sources.EventSink.compactDates]], the parquet stand-in for
+  * Iceberg `rewrite_data_files` / Delta `OPTIMIZE`): content identity,
+  * per-date file-count cap, untouched-partition stability,
+  * idempotency, and the (event_type, ts) clustering that makes
+  * row-group stats selective.
   */
 class CompactionSpec extends SparkTestBase {
-
-  private val fmt = MergeTableFormat.forName("parquet")
 
   private def partFiles(dir: java.io.File): Seq[java.io.File] =
     Option(dir.listFiles()).getOrElse(Array.empty)
@@ -42,7 +40,7 @@ class CompactionSpec extends SparkTestBase {
     val (toCompact, untouched) = (days.init, days.last)
     val untouchedBefore = partFiles(dateDirs(sink)(untouched))
       .map(f => f.getName -> f.lastModified()).toSet
-    fmt.compact(spark, sink, toCompact)
+    EventSink.compactDates(spark, sink, toCompact)
 
     // per-date cap: every compacted date now has exactly 1 file
     toCompact.foreach { d =>
@@ -57,7 +55,7 @@ class CompactionSpec extends SparkTestBase {
     assert(afterRows == beforeRows, "compaction changed the sink's contents")
 
     // idempotency: re-running compacts to the same logical state
-    fmt.compact(spark, sink, toCompact)
+    EventSink.compactDates(spark, sink, toCompact)
     assert(spark.read.parquet(sink).collect().toSet == beforeRows)
   }
 
@@ -66,7 +64,7 @@ class CompactionSpec extends SparkTestBase {
     val sink = s"$root/sink"
     EventSink.writeDatePartitioned(Tables.events(spark, sf), sink, filesPerDate = 4)
     val day = dateDirs(sink).keys.toSeq.sorted.head
-    fmt.compact(spark, sink, Seq(day))
+    EventSink.compactDates(spark, sink, Seq(day))
     val file = partFiles(dateDirs(sink)(day)) match {
       case Seq(single) => single
       case other => fail(s"expected 1 compacted file, got ${other.size}")

@@ -15,6 +15,11 @@ class GraftSessionSpec extends SparkTestBase {
   private val Initial = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
   private val sf01 = new File(new File(sf).getParentFile, "sf0.1").getPath
 
+  /** The `.scala` files under `dir` (relative to the project root). */
+  private def scalaFiles(dir: String): Seq[java.nio.file.Path] =
+    Files.walk(new File(dir).toPath).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+
   private def derived(dir: String, cpus: Int): (Long, Long) = {
     val c = GraftSession.derivedConfs(dir, cpus)
     (c(Split).toLong, c(Initial).toLong)
@@ -61,8 +66,7 @@ class GraftSessionSpec extends SparkTestBase {
   }
 
   test("every main builds its session through GraftSession; one counting listener") {
-    val sources = Files.walk(new File("src/main/scala").toPath).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    val sources = scalaFiles("src/main/scala")
     def filesWith(needle: String): Map[String, Int] = sources.flatMap { p =>
       val n = java.util.regex.Pattern.quote(needle).r.findAllIn(Files.readString(p)).size
       if (n > 0) Some(p.getFileName.toString -> n) else None
@@ -76,7 +80,7 @@ class GraftSessionSpec extends SparkTestBase {
     // the five mains; one-off benchmark mains are not regrown (their
     // measurements live in BASELINE.md, per-query A/B runs through
     // Bench's SPARK_GRAFT_ONLY / SPARK_GRAFT_EXTRA_CONFS). The full
-    // signature: ReportMaintenance.maintainOnIngest matches a bare
+    // signature: DayRollup.maintainOnIngest matches a bare
     // `def main`.
     assert(filesWith("def main(args: Array[String])").keySet == Set("Bench.scala",
       "Verify.scala", "PlanSnap.scala", "ClusterVerify.scala", "ChaosVerify.scala"))
@@ -89,9 +93,41 @@ class GraftSessionSpec extends SparkTestBase {
       "graph.pagerankMidMax", "graph.pagerankBroadcastNodeMax"))
   }
 
+  test("every main source file is reached from a main or perfbench") {
+    val sources = scalaFiles("src/main/scala")
+    val bench = scalaFiles("perfbench/jvm/src/main/scala")
+    assert(sources.nonEmpty && bench.nonEmpty, "run from the project root")
+    // a file's top-level objects, classes and traits
+    val decl = ("(?m)^(?:(?:private(?:\\[\\w+\\])?|protected|final|sealed|abstract|case|" +
+      "implicit)\\s+)*(?:object|class|trait)\\s+(\\w+)").r
+    val names = sources.map(p =>
+      p -> decl.findAllMatchIn(Files.readString(p)).map(_.group(1)).toSeq).toMap
+    def code(p: java.nio.file.Path): String = Files.readString(p).split("\n")
+      .filterNot(l => Seq("//", "/*", "*").exists(l.trim.startsWith)).mkString("\n")
+    // a file is reached when a name it declares appears, outside
+    // comment lines, in a reached file; the closure starts at the mains
+    val roots = sources.filter(p =>
+      Files.readString(p).contains("def main(args: Array[String])")) ++ bench
+    assert(roots.size == 5 + bench.size)
+    val reached = scala.collection.mutable.Set[java.nio.file.Path](roots: _*)
+    val frontier = scala.collection.mutable.Stack[java.nio.file.Path](roots: _*)
+    while (frontier.nonEmpty) {
+      val text = code(frontier.pop())
+      names.foreach { case (p, ns) =>
+        if (!reached(p) && ns.exists(n => s"\\b$n\\b".r.findFirstIn(text).isDefined)) {
+          reached += p
+          frontier.push(p)
+        }
+      }
+    }
+    val unreached = sources.filterNot(reached).map(p =>
+      new File("src/main/scala").toPath.relativize(p).toString).sorted
+    assert(unreached.isEmpty,
+      s"main files no main or perfbench reaches: ${unreached.mkString(", ")}")
+  }
+
   test("every persisted artifact derives its root and checks completion in StoreProtocol") {
-    val sources = Files.walk(new File("src/main/scala/graft/operators").toPath)
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val sources = scalaFiles("src/main/scala/graft/operators")
     def filesWith(needle: String): Set[String] = sources
       .filter(p => Files.readString(p).contains(needle))
       .map(_.getFileName.toString).toSet

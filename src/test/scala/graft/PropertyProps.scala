@@ -312,7 +312,7 @@ object NanosPushdownProps extends SparkProps("nanos_pushdown") {
 object PqProps extends SparkProps("pq_codes") {
   import org.apache.spark.sql.Row
   import org.apache.spark.sql.types._
-  import graft.operators.{OpqLite, PqIndex}
+  import graft.operators.PqIndex
 
   private val genVec: Gen[Seq[Double]] =
     Gen.listOfN(64, Gen.choose(-8.0, 8.0)).map(_.toSeq)
@@ -336,18 +336,6 @@ object PqProps extends SparkProps("pq_codes") {
           exists(col("c"), x => x < 0 || x >= PqIndex.K))
         .count()
       bad == 0L
-    }
-
-  // Law: the balancing permutation is a bijection of 0..63 for
-  // ARBITRARY variance profiles (ties, zeros, equal values), and
-  // permuting preserves the vector as a multiset.
-  property("balancedPermutation: bijection; permute preserves multiset") =
-    forAll(Gen.listOfN(64, Gen.choose(0.0, 100.0))) { vars =>
-      val perm = OpqLite.balancedPermutation(vars.toSeq)
-      val bijective = perm.sorted == (0 until 64)
-      val v = (1 to 64).map(_.toDouble)
-      val permuted = perm.map(i => v(i))
-      bijective && permuted.sorted == v.sorted
     }
 }
 

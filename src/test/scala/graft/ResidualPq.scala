@@ -1,7 +1,9 @@
-package graft.operators
+package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.operators.PqIndex
 
 /** Residual product quantization — the IVF×PQ refinement that encodes
   * each vector's RESIDUAL from its coarse centroid (`v − c_bucket`)
@@ -11,7 +13,8 @@ import org.apache.spark.sql.functions._
   * budget quantizes them much more tightly; on an isotropic corpus
   * the coarse centroids explain little variance and the gain is
   * marginal — ResidualPqSpec MEASURES both claims, which is why the
-  * declared `ivfpq_topk` keeps plain codes on this isotropic fixture.
+  * declared `ivfpq_topk` keeps plain codes on this isotropic fixture,
+  * and why this lives beside that spec rather than in the library.
   *
   * Approximate scoring composes linearly:
   * `dot(q, v̂) = dot(q, c_bucket) + dot(q, recon(codes_r))` — the

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IvfIndex, PqIndex, ResidualPq}
+import graft.operators.{IvfIndex, PqIndex}
 import graft.sources.Tables
 
 /** Residual PQ (ResidualPq): on a CLUSTERED corpus, encoding the

@@ -4,10 +4,9 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{DedupOps, SkewOps}
 import graft.sources.Tables
-import graft.streaming.{StatefulSessions, StreamingQueries}
 
 /** Specs for the round-2 scale utilities: mergeable source
-  * signatures, stateful streaming sessionization, salted skew join.
+  * signatures, salted skew join.
   */
 class SourceOverlapSpec extends SparkTestBase {
   test("minhash overlap estimator within 4 sd of exact union jaccard per source pair") {
@@ -36,70 +35,6 @@ class SourceOverlapSpec extends SparkTestBase {
       assert(math.abs(estJ - exact) <= 4 * sd + 0.02,
         s"($lang,$sa,$sb): est $estJ vs exact $exact (sd $sd)")
     }
-  }
-}
-
-class StatefulSessionsSpec extends SparkTestBase {
-  test("flatMapGroupsWithState sessionizer == batch sessionize on full stream") {
-    val q = StatefulSessions.sessionCounts(StreamingQueries.eventsStream(spark, sf))
-      .writeStream.format("memory").queryName("stateful_sessions")
-      .outputMode("update").start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // update mode re-emits per batch; keep the final (max events) row per user
-    val got = spark.table("stateful_sessions")
-      .groupBy("user_id")
-      .agg(max(struct(col("n_events"), col("n_sessions"))).as("s"))
-      .select(col("user_id"), col("s.n_sessions"), col("s.n_events"))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val expect = graft.operators.SliQueries.sliSessionize(spark, sf)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val events = Tables.events(spark, sf).groupBy("user_id").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.keySet == expect.keySet)
-    expect.foreach { case (u, nSess) =>
-      assert(got(u)._1 == nSess, s"user $u: sessions ${got(u)._1} != $nSess")
-      assert(got(u)._2 == events(u), s"user $u: events ${got(u)._2} != ${events(u)}")
-    }
-  }
-
-  test("EventTimeTimeout closed sessions == batch session records (state expires)") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, java.sql.Timestamp)]
-    val q = StatefulSessions.closedSessions(input.toDF().toDF("user_id", "ts"))
-      .writeStream.format("memory").queryName("closed_sessions")
-      .outputMode("append").start()
-    try {
-      // feed in global ts order (watermark delay 0) in three batches,
-      // so sessions span micro-batch boundaries via state
-      val evs = Tables.events(spark, sf).select(col("user_id"), col("ts"))
-        .orderBy("ts").collect().map(r => (r.getLong(0), r.getTimestamp(1)))
-      evs.grouped(evs.length / 3 + 1).foreach { chunk =>
-        input.addData(chunk.toSeq); q.processAllAvailable()
-      }
-      // watermark-advancing sentinel (dummy user far in the future)
-      // fires every pending EventTimeTimeout -> all real sessions close
-      input.addData(Seq((-1L,
-        new java.sql.Timestamp(evs.last._2.getTime + 86400000L))))
-      q.processAllAvailable()
-
-      val got = spark.table("closed_sessions").filter(col("user_id") >= 0)
-        .select("user_id", "start_ms", "end_ms", "n_events")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .sorted.toSeq
-      val expect = graft.operators.SliQueries.sessionized(Tables.events(spark, sf))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(min(unix_millis(col("ts"))).as("s"),
-          max(unix_millis(col("ts"))).as("e"), count(lit(1)).as("n"))
-        .select("user_id", "s", "e", "n")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .sorted.toSeq
-      assert(got.size == expect.size,
-        s"session record count: streaming ${got.size} != batch ${expect.size}")
-      assert(got == expect)
-    } finally q.stop()
   }
 }
 

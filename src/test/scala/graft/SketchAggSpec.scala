@@ -116,9 +116,10 @@ class SketchAggSpec extends SparkTestBase {
       .select(to_date(col("ts")).as("d")).distinct()
       .collect().map(_.getDate(0).toString).sorted
     assert(days.size > 2)
-    days.foreach(d => SketchRollup.appendDay(spark, sf, d, inc))
+    val ev = Tables.events(spark, sf)
+    days.foreach(d => SketchRollup.appendDayFrom(spark, ev, d, inc))
     // replay one mid-stream day: must be a no-op
-    SketchRollup.appendDay(spark, sf, days(days.size / 2), inc)
+    SketchRollup.appendDayFrom(spark, ev, days(days.size / 2), inc)
     val fromInc = spark.read.parquet(inc)
       .groupBy("event_type")
       .agg(SketchFunctions.minhashMerge(col("sig"), SketchRollup.K).as("sig"),
@@ -143,7 +144,7 @@ class SketchAggSpec extends SparkTestBase {
       .withColumn("ts", timestamp_micros(lit(1704067200000000L) +
         (col("event_id") % 3) * 86400000000L + col("event_id") * 1000000L))
       .withColumn("props", lit("{}"))
-    val q = SketchRollup.streamingIngest(stream, s"$base/sink", s"$base/sketch",
+    val q = SketchRollup.maintainOnIngest(stream, s"$base/sink", s"$base/sketch",
       Seq("event_id"), s"$base/ckpt")
     try {
       input.addData((1 to 40).map(i => (i.toLong, i.toLong % 7, "a", 1.0)): _*)

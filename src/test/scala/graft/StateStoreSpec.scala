@@ -6,10 +6,11 @@ import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, Streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.streaming.{BurnRateStream, StatefulSessions, StreamJoins}
+import graft.streaming.{BurnRateStream, StreamJoins}
 
-/** RocksDB state-store hardening (round-4): every stateful streaming
-  * twin runs under RocksDBStateStoreProvider — the 100 TB state
+/** RocksDB state-store hardening (round-4): the stateful streaming
+  * plane (the [[StreamJoins]] interval join and the [[BurnRateStream]]
+  * pipeline) runs under RocksDBStateStoreProvider — the 100 TB state
   * configuration (the default HDFS-backed store holds state on the
   * executor HEAP; at production state sizes that is an OOM, while
   * RocksDB keeps state off-heap and spills to local disk) — with
@@ -44,47 +45,6 @@ class StateStoreSpec extends SparkTestBase {
 
   private def maxStateRows(q: StreamingQuery): Long =
     q.lastProgress.stateOperators.map(_.numRowsTotal).max
-
-  test("closedSessions under RocksDB: state is O(active users) across 10x session history") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[(Long, java.sql.Timestamp)]
-    val q = StatefulSessions.closedSessions(in.toDF().toDF("user_id", "ts"))
-      .writeStream.format("memory").queryName("rocks_sessions")
-      .outputMode("append").start()
-    val users = 10
-    val rounds = 10 // 10 sessions/user — state must NOT grow with this
-    var maxState = 0L
-    val base = 1704067200000L // 2024-01-01 00:00 UTC
-    try {
-      (0 until rounds).foreach { r =>
-        val t0 = base + r * 3600000L // rounds 1 h apart ⇒ gap > 30 min
-        val evs = for { u <- 0 until users; k <- 0 until 3 }
-          yield (u.toLong, new java.sql.Timestamp(t0 + u * 7L + k * 60000L))
-        in.addData(evs)
-        q.processAllAvailable()
-        maxState = math.max(maxState, maxStateRows(q))
-      }
-      // far-future sentinel fires every pending event-time timer so the
-      // final round's sessions emit and their state is removed
-      in.addData((-1L, new java.sql.Timestamp(base + 30L * 86400000L)))
-      q.processAllAvailable()
-      in.addData((-1L, new java.sql.Timestamp(base + 60L * 86400000L)))
-      q.processAllAvailable()
-      assertRocksDb(q)
-      val endState = maxStateRows(q)
-      // after the flush only the sentinel's own open session may remain
-      assert(endState <= 2, s"state not evicted after flush: $endState rows")
-    } finally q.stop()
-    val emitted = spark.table("rocks_sessions").filter(col("user_id") >= 0).count()
-    assert(emitted == users * rounds,
-      s"eviction lost sessions: $emitted != ${users * rounds}")
-    // one open session per user, plus at most one round of eviction lag
-    // (timers fire on the batch AFTER the watermark passes) — never the
-    // 100 sessions of history
-    assert(maxState <= 2L * users + 1,
-      s"session state grew with history: max $maxState rows for $users users")
-  }
 
   test("stream-stream interval join under RocksDB: state bounded by the watermark horizon") {
     import spark.implicits._

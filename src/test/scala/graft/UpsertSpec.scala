@@ -5,21 +5,19 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{EventSink, MergeTableFormat, Tables}
+import graft.operators.ReportMaintenance
+import graft.sources.{EventSink, Tables, Upsert}
 
-/** Idempotent upsert/backfill contract, proven THROUGH the
-  * table-format seam ([[graft.sources.MergeTableFormat]]): every
-  * merge below goes through `forName("parquet")`, so a format-backed
-  * implementation (Iceberg/Delta MERGE INTO) inherits this exact
-  * contract — re-ingesting overlapping data can never double-count,
-  * corrected rows replace by content key, untouched partitions are
-  * never rewritten, and concurrent writers lose nothing (via the
-  * create-exclusive lock here; via the format's
+/** Idempotent upsert/backfill contract of
+  * [[graft.sources.Upsert.upsertDatePartitioned]] — the parquet
+  * stand-in for a table-format MERGE INTO, so an Iceberg/Delta backend
+  * inherits this exact contract: re-ingesting overlapping data can
+  * never double-count, corrected rows replace by content key,
+  * untouched partitions are never rewritten, and concurrent writers
+  * lose nothing (via the create-exclusive lock here; via the format's
   * optimistic-concurrency commit there).
   */
 class UpsertSpec extends SparkTestBase {
-
-  private val fmt = MergeTableFormat.forName("parquet")
 
   private def events: DataFrame = Tables.events(spark, sf)
 
@@ -30,10 +28,10 @@ class UpsertSpec extends SparkTestBase {
 
   test("re-ingesting the same batch is a no-op (counts AND content identical)") {
     val path = Files.createTempDirectory("graft_upsert").toString + "/sink"
-    fmt.upsert(spark, path, events, Seq("event_id"))
+    Upsert.upsertDatePartitioned(spark, path, events, Seq("event_id"))
     val first = fingerprint(spark.read.parquet(path))
     // replay the identical batch — the at-least-once scenario
-    fmt.upsert(spark, path, events, Seq("event_id"))
+    Upsert.upsertDatePartitioned(spark, path, events, Seq("event_id"))
     val second = fingerprint(spark.read.parquet(path))
     assert(first == second, s"replay changed the sink: $first -> $second")
     assert(first._1 == events.count())
@@ -41,12 +39,13 @@ class UpsertSpec extends SparkTestBase {
 
   test("backfill with corrected values replaces rows by key, count unchanged") {
     val path = Files.createTempDirectory("graft_upsert").toString + "/sink"
-    fmt.upsert(spark, path, events, Seq("event_id"))
+    Upsert.upsertDatePartitioned(spark, path, events, Seq("event_id"))
     val before = spark.read.parquet(path).count()
     // correct one day's values (the backfill): same keys, value*2
     val day = events.filter(to_date(col("ts")) === lit("2024-01-05").cast("date"))
     assert(day.count() > 0)
-    fmt.upsert(spark, path, day.withColumn("value", col("value") * 2), Seq("event_id"))
+    Upsert.upsertDatePartitioned(spark, path, day.withColumn("value", col("value") * 2),
+      Seq("event_id"))
     val after = spark.read.parquet(path)
     assert(after.count() == before, "backfill changed the row count")
     val corrected = after.filter(col("event_date") === lit("2024-01-05").cast("date"))
@@ -58,7 +57,7 @@ class UpsertSpec extends SparkTestBase {
   test("mixed batch: new keys insert, old keys update, within-batch dups resolve to latest") {
     val path = Files.createTempDirectory("graft_upsert").toString + "/sink"
     val base = events.filter(col("event_id") < 500)
-    fmt.upsert(spark, path, base, Seq("event_id"))
+    Upsert.upsertDatePartitioned(spark, path, base, Seq("event_id"))
     val nBase = base.count()
     // batch = 100 updates + 100 inserts, each key duplicated with an
     // older-ts variant that must lose
@@ -66,7 +65,7 @@ class UpsertSpec extends SparkTestBase {
       .withColumn("event_type", lit("upserted"))
     val stale = updates.withColumn("ts", col("ts") - expr("INTERVAL 1 HOUR"))
       .withColumn("event_type", lit("stale_must_lose"))
-    fmt.upsert(spark, path, updates.unionByName(stale), Seq("event_id"))
+    Upsert.upsertDatePartitioned(spark, path, updates.unionByName(stale), Seq("event_id"))
     val sink = spark.read.parquet(path)
     assert(sink.count() == nBase + 100)
     assert(sink.select(countDistinct("event_id")).collect().head.getLong(0) == nBase + 100)
@@ -76,7 +75,7 @@ class UpsertSpec extends SparkTestBase {
 
   test("untouched partitions are not rewritten (file mtimes unchanged)") {
     val path = Files.createTempDirectory("graft_upsert").toString + "/sink"
-    fmt.upsert(spark, path, events, Seq("event_id"))
+    Upsert.upsertDatePartitioned(spark, path, events, Seq("event_id"))
     def mtimes(date: String): Map[String, Long] = {
       val d = new java.io.File(s"$path/event_date=$date")
       d.listFiles().filter(_.getName.endsWith(".parquet"))
@@ -89,7 +88,7 @@ class UpsertSpec extends SparkTestBase {
     val before = otherDates.map(d => d -> mtimes(d)).toMap
     Thread.sleep(1100) // FS mtime granularity
     val day = events.filter(to_date(col("ts")) === lit("2024-01-05").cast("date"))
-    fmt.upsert(spark, path, day, Seq("event_id"))
+    Upsert.upsertDatePartitioned(spark, path, day, Seq("event_id"))
     otherDates.foreach { d =>
       assert(mtimes(d) == before(d), s"partition $d was rewritten by an unrelated upsert")
     }
@@ -104,7 +103,8 @@ class UpsertSpec extends SparkTestBase {
     val input = MemoryStream[(Long, String, Double)]
     val stream = input.toDF().toDF("event_id", "event_type", "value")
       .withColumn("ts", timestamp_micros(lit(1704067200000000L) + col("event_id") * 1000000L))
-    val q = fmt.streamingUpsert(stream, path, Seq("event_id"), s"$base/ckpt")
+    val q = ReportMaintenance.maintainOnIngest(stream, path, s"$base/report",
+      Seq("event_id"), s"$base/ckpt")
     try {
       input.addData((1L, "a", 1.0), (2L, "a", 1.0))
       q.processAllAvailable()
@@ -130,12 +130,12 @@ class UpsertSpec extends SparkTestBase {
     import scala.concurrent.ExecutionContext.Implicits.global
     val path = Files.createTempDirectory("graft_upsert_cc").toString + "/sink"
     // seed the sink so both racers take the merge path, not first-load
-    fmt.upsert(spark, path,
+    Upsert.upsertDatePartitioned(spark, path,
       events.filter(col("event_id") < 100), Seq("event_id"))
     val a = events.filter(col("event_id") >= 100 && col("event_id") < 300)
     val b = events.filter(col("event_id") >= 300 && col("event_id") < 500)
-    val fa = Future(fmt.upsert(spark, path, a, Seq("event_id")))
-    val fb = Future(fmt.upsert(spark, path, b, Seq("event_id")))
+    val fa = Future(Upsert.upsertDatePartitioned(spark, path, a, Seq("event_id")))
+    val fb = Future(Upsert.upsertDatePartitioned(spark, path, b, Seq("event_id")))
     Await.result(fa, 120.seconds); Await.result(fb, 120.seconds)
     val got = spark.read.parquet(path).select("event_id")
       .collect().map(_.getLong(0)).toSet
@@ -154,19 +154,10 @@ class UpsertSpec extends SparkTestBase {
     assert(lock.createNewFile())
     lock.setLastModified(System.currentTimeMillis() - 3600_000L) // 1 h old
     // must break the stale lock and complete the merge
-    fmt.upsert(spark, path,
+    Upsert.upsertDatePartitioned(spark, path,
       events.filter(col("event_id") < 50), Seq("event_id"))
     assert(spark.read.parquet(path).count() == 50)
     assert(!lock.exists(), "stale lock not cleaned up")
-  }
-
-  test("format registry: parquet resolves; iceberg/delta fail with the swap recipe") {
-    assert(MergeTableFormat.forName("parquet").name == "parquet")
-    Seq("iceberg", "delta").foreach { f =>
-      val e = intercept[IllegalArgumentException](MergeTableFormat.forName(f))
-      assert(e.getMessage.contains("MERGE INTO"), s"$f error lacks the mapping: ${e.getMessage}")
-    }
-    intercept[IllegalArgumentException](MergeTableFormat.forName("hudi"))
   }
 
   test("filesPerDate caps per-date file count (and >1 splits big dates)") {
